@@ -71,445 +71,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return gps.unionByName(ev)
 
 
-# The committed driver-correctness records this checkout ships — an
-# explicit allowlist, NOT a glob: an untracked or corrupt local file
-# must never silently change the emitted order (ADVICE r3).
-_COMMITTED_ROUNDS = (
-    "CORRECTNESS_r01.json",
-    "CORRECTNESS_r02.json",
-    "CORRECTNESS_r03.json",
-    "CORRECTNESS_r04.json",
-    "CORRECTNESS_r05.json",
-    "CORRECTNESS_r06.json",
-    "CORRECTNESS_r07.json",
-    "CORRECTNESS_r08.json",
-    "CORRECTNESS_r09.json",
-    "CORRECTNESS_r10.json",
-    "CORRECTNESS_r11.json",
-    "CORRECTNESS_r12.json",
-    "CORRECTNESS_r13.json",
-    "CORRECTNESS_r14.json",
-    "CORRECTNESS_r15.json",
-    "CORRECTNESS_r16.json",
-)
-
-# Keys whose EXECUTION PLAN changed after their last green driver row,
-# as (key, round_changed): changed code must re-enter the driver's
-# verification window rather than hide behind an old green row (ADVICE
-# r3, high). An entry SELF-PRUNES once a committed record carries a
-# hash-green row for the key from round >= round_changed — so a future
-# builder session forgetting to clear the list cannot waste window
-# slots re-verifying forever. Listed in re-check priority order — the
-# keys whose change could move values first. (The four r4 entries
-# self-pruned when CORRECTNESS_r04.json entered the allowlist.) For
-# the record: q_tpch_q11's threshold compare now uses explicitly
-# bounded DECIMAL(38,8) products — the bare v * bigint could round
-# under allowPrecisionLoss (ADVICE r4); q_fuzzy_join materializes its
-# name canopy once behind a cardinality gate (values unchanged by
-# construction, re-check anyway). q_triangle_count also changed (r5,
-# adjacency-intersect rewrite) but has never had a driver row, so
-# first-time rank already front-runs it.
-_CHANGED_SINCE_VERIFIED = (
-    # (The five r6 entries — q_rrf_fusion, q_ann_ivf, q_pagerank,
-    # q_triangle_count, q_label_propagation — self-pruned when
-    # CORRECTNESS_r06.json entered the allowlist with green rows for
-    # all of them.)
-    #
-    # r7: every availableNow streaming key now returns an eagerly
-    # checkpointed snapshot with the uuid memory-sink view dropped
-    # (streaming/runner.py — session-hygiene fix, VERDICT r6 item 3).
-    # Values are invariant by construction (same sink rows, snapshot
-    # taken before the drop; pinned by the streaming-vs-batch tests),
-    # but the returned plan changed shape → re-verify. q_stream_session
-    # (batch session_window) and q_stream_foreachbatch (parquet
-    # round-trip) don't ride run_available_now and are unchanged.
-    ("q_stream_fix_merge", 7),
-    ("q_stream_tws_fix_merge", 7),
-    ("q_stream_tws_timers", 7),
-    ("q_stream_tumbling", 7),
-    ("q_stream_sliding", 7),
-    ("q_stream_dedup", 7),
-    ("q_stream_static_join", 7),
-    ("q_stream_stream_join", 7),
-    ("q_stream_stream_left_join", 7),
-    ("q_stream_session_true", 7),
-    # r7: q_multimodal's decode stage is now a make_decode_batch
-    # closure with the capability flag bound by value (ADVICE r6) —
-    # same stub arithmetic in this environment, re-check anyway.
-    ("q_multimodal", 7),
-    # r7: q_join_bucketed's layout now re-attaches across sessions
-    # (fingerprint-gated external DDL) instead of re-landing — values
-    # invariant (attach losslessness pytest-pinned), re-check anyway.
-    ("q_join_bucketed", 7),
-    # r8: the iterative graph consumers read LANDED edge lists
-    # (landed_customer_supplier_edges / landed_copurchase_edges)
-    # instead of re-deriving them per call — values invariant (same
-    # edges, landing is lossless; all four HASH-OK at sf0.01 locally),
-    # re-check anyway since the scan subtrees changed.
-    ("q_bfs_distance", 8),
-    ("q_pagerank", 8),
-    ("q_label_propagation", 8),
-    ("q_triangle_count", 8),
-    # r9: ORACLE text changed (ADVICE r8 low items) — the engine plans
-    # are untouched but the driver compares against the new SQL, so
-    # both re-enter the window: q_session_dynamic_gap's session-id
-    # window now tie-orders by (ts, event_id) like its flag window;
-    # q_udtf_analyze's denominator is parenthesized to match the
-    # engine's left-to-right field sum. Values invariant on current
-    # fixtures (verified at sf0.01), re-check anyway.
-    ("q_session_dynamic_gap", 9),
-    ("q_udtf_analyze", 9),
-    # r9: ivf_ann's centroid/assignment/probe stages refactored into
-    # shared helpers (operators/similarity.py _label_centroids /
-    # _nearest_list_assignment / _ivf_probe_lists) so the new IVF×SQ
-    # key composes them — expressions identical by construction
-    # (hash-verified at sf0.001/sf0.01 post-refactor), re-check anyway.
-    ("q_ann_ivf", 9),
-    # r10 (ADVICE r9 fixes): q_gap_fill's mask now mirrors the
-    # oracle's CASE on NULL event_type; q_hll_sliding's approx frame
-    # is RANGE over calendar days (was ROWS over observed-day rows);
-    # q_session_duration rounds p50/p90 to 6 dp BOTH sides (oracle
-    # text changed too); q_custom_stream_sink's publish names are now
-    # deterministic (batchId, task idx) for idempotent replay — same
-    # rows, new file names under the same glob. All four re-verified
-    # green at sf0.01 locally, re-check in the driver window anyway.
-    ("q_gap_fill", 10),
-    ("q_hll_sliding", 10),
-    ("q_session_duration", 10),
-    ("q_custom_stream_sink", 10),
-    # r11 (ADVICE r10 fixes): q_time_weighted_avg's csum*dt product
-    # now runs decimal(19,0)x(19,0)->(38,0) Spark-side / HUGEINT in
-    # the oracle (BIGINT overflowed on multi-year per-key gaps);
-    # q_skew_kurtosis wraps both standardized-moment denominators in
-    # NULLIF (zero-variance group gave NaN-vs-engine-dependent);
-    # q_kcore's peeling loop now also breaks at the fully-peeled
-    # (empty-edge-set) fixpoint — values invariant, plan changed.
-    # All three re-verified green at sf0.01 AND sf0.1 locally.
-    ("q_time_weighted_avg", 11),
-    ("q_skew_kurtosis", 11),
-    ("q_kcore", 11),
-    # r11 (Spark-Connect pass): q_countmin_heavy probes the sketch via
-    # the pure-Python CountMinSketchView (bitwise-parity-pinned vs the
-    # JVM probe) instead of py4j readFrom; q_join_skew_aqe's
-    # executedPlan read is gated on is_classic_session. Values
-    # invariant (parity test + green at sf0.01), re-check anyway.
-    ("q_countmin_heavy", 11),
-    ("q_join_skew_aqe", 11),
-    # r12 (ADVICE r11 fixes): the BPE symbol string now carries a
-    # DOUBLED separator at every boundary so one replace pass merges
-    # ADJACENT occurrences of the winning pair too ('mama' → [ma, ma];
-    # the shared-delimiter form dropped every other occurrence) —
-    # VALUES CHANGE where the corpus has adjacent pair repeats; oracle
-    # updated identically. q_mad_outliers wraps the MAD denominator in
-    # NULLIF both sides (zero-MAD group flagged every row via
-    # NaN > 3.5). q_ann_pq/q_ann_ivfpq encode via a single-fold argmin
-    # (values invariant — same first-min-index semantics, pinned by
-    # the recall floors + parity at sf0.01).
-    ("q_bpe_train", 12),
-    ("q_bpe_encode", 12),
-    ("q_mad_outliers", 12),
-    ("q_ann_pq", 12),
-    ("q_ann_ivfpq", 12),
-    # r12: q_udtf_analyze pins pickle evaluation for its UDTF (the
-    # r11 session-wide Arrow-UDTF switch had tripled this key, 0.67s
-    # vs 2.04s warm — a struct-arg one-tuple-per-row UDTF has nothing
-    # for Arrow to vectorize). Values invariant (same eval()), plan
-    # node type changed -> re-check.
-    ("q_udtf_analyze", 12),
-    # r13 (ADVICE r12 fixes): q_ohlc_bars/q_stream_ohlc tie key
-    # widened to decimal(38,0) µs·10²⁰ + FULL event_id (the bigint
-    # µs·10⁷ + id%10⁷ form collided for ids ≥ 1e7 apart) — values
-    # invariant on the fixtures (all ids < 1e7, ties resolve
-    # identically), key expression changed → re-check. q_mannwhitney
-    # tie-sum now casts EACH factor before multiplying (d19(c)³ -
-    # dec(c)), matching the oracle's HUGEINT discipline — values
-    # invariant below ~3e9 rows/value, expression changed.
-    ("q_ohlc_bars", 13),
-    ("q_stream_ohlc", 13),
-    ("q_mannwhitney", 13),
-    # r13: the three global-cumulative keys now ride the two-pass
-    # range-partitioned prefix sum (operators/prefix_sum.py — VERDICT
-    # r12 item 2) instead of a single-partition window; q_knee_lorenz
-    # additionally picks its knee via a 1-row min_by argmax. Values
-    # invariant (bit-identical integer cumulative, pinned by
-    # tests/test_prefix_sum.py replicas + sf0.1 hash check), plan
-    # shape changed → re-check.
-    ("q_histogram_equidepth", 13),
-    ("q_key_islands", 13),
-    ("q_knee_lorenz", 13),
-    # r13: q_triangle_count's skew-gate stats (max_deg, m) now persist
-    # beside the landed co-purchase edges (fingerprint-keyed) instead
-    # of re-running the blocking degree job per call — values invariant
-    # (same exact stats pair, hash-checked at sf0.001/sf0.1), call
-    # path changed → re-check.
-    ("q_triangle_count", 13),
-    # r13 (late): the unigram pair now reads the vocab from a
-    # fingerprint-keyed landing (train once per corpus) instead of
-    # re-training per call — values invariant (deterministic exact
-    # integer table, hash-checked at all three SFs after the change),
-    # call path changed → re-check.
-    ("q_unigram_train", 13),
-    ("q_unigram_encode", 13),
-    # r14 (ADVICE r13 fixes): q_kendall_tau classifies pairs via exact
-    # {-1,0,1} sign products instead of the overflow-prone bigint
-    # difference product (values invariant below int64 overflow,
-    # hash-checked at all three SFs); q_state_time_travel's snapshot
-    # join is now latest LEFT at0 with n_at_batch0 coalesced to 0
-    # (values invariant on fixtures where every type has an even id);
-    # q_unigram_encode's word-count lookup broadcast is size-gated
-    # (plan hint only); the three prefix-sum riders inherit the
-    # NULL-prefix offset fix (values invariant — non-null sources).
-    ("q_kendall_tau", 14),
-    ("q_state_time_travel", 14),
-    ("q_unigram_encode", 14),
-    ("q_key_islands", 14),
-    ("q_knee_lorenz", 14),
-    ("q_histogram_equidepth", 14),
-    # r14 (VERDICT r13 item 1): q_max_concurrency's boundary sweep and
-    # q_heaps_law's per-doc cumulative now ride the two-pass
-    # range-partitioned prefix sum (no Exchange SinglePartition —
-    # pinned in tests/test_prefix_sum.py). Values invariant
-    # (bit-identical integer cumulatives; equal-(t,k) ties share one
-    # sign), hash-checked at all three SFs — re-check anyway.
-    ("q_max_concurrency", 14),
-    ("q_heaps_law", 14),
-    # r14 (VERDICT r13 item 5): the per-VALUE cumulative stats family
-    # and q_vocab_coverage's type-rank cumulative now ride the
-    # two-pass prefix sum; q_wasserstein's global lead(v) became a
-    # parallel rn+1 equi-join; q_vocab_coverage's corpus totals come
-    # exactly from the pass-1 partials (crossed 1-row aggregate
-    # removed). Values invariant (bit-identical integer cumulatives),
-    # hash-checked at all three SFs — re-check anyway.
-    ("q_ks_test", 14),
-    ("q_mannwhitney", 14),
-    ("q_spearman_corr", 14),
-    ("q_roc_auc", 14),
-    ("q_trimmed_mean", 14),
-    ("q_wasserstein", 14),
-    ("q_vocab_coverage", 14),
-    # r14: q_downsample_lttb's triangle areas now anchor x at the
-    # window start (xr = x - lo) — translation-invariant, values
-    # bit-identical (the lo*na*nb shift cancels exactly in both
-    # factors; hash-checked at all three SFs), but the absolute-µs
-    # form measured a decimal(38,0) overflow at 16x density
-    # (scale_curve octave) — expression changed → re-check.
-    ("q_downsample_lttb", 14),
-    # r15 (ADVICE r14 medium): the partitioned prefix sum's pass-2
-    # offset join is now NULL-SAFE on the partition columns (a plain
-    # equi-join dropped NULL-group rows) — q_ks_test is the only
-    # partition_by rider; values invariant (mktsegment is non-null),
-    # hash-checked at sf0.01 — re-check anyway. q_heaps_law's
-    # checkpoint step is integer floor division both engines.
-    ("q_ks_test", 15),
-    ("q_heaps_law", 15),
-    # r15 (VERDICT r14 items 3+5): q_ewma/q_holt_linear carry the
-    # assert_true bounded-history tripwire (values invariant — the
-    # guard column filters nothing in contract). q_cap_per_group
-    # round-tripped: the two-pass pre-filter form was built, measured
-    # SLOWER than Spark 4's native Partial WindowGroupLimit plan, and
-    # reverted — final plan equals the long-verified one-window form
-    # (now WindowGroupLimit-pinned in tests); re-check anyway since
-    # the key churned this round.
-    ("q_ewma", 15),
-    ("q_holt_linear", 15),
-    ("q_cap_per_group", 15),
-    # r15 (VERDICT r14 item 6): the substring-dedup frequency stage is
-    # now count(*) OVER (PARTITION BY hash) instead of groupBy +
-    # join-back (row-identical — the window count equals the agg
-    # count; hash-checked at sf0.01 AND sf0.1), and the strided
-    # candidate set carries a lazy doc-id-sized pin. Plan shape
-    # changed (the 634 s -> 15 s adversarial-octave fix) → re-check.
-    ("q_dedup_substring", 15),
-    ("q_dedup_substring_strided", 15),
-    # r15 self-review: q_dedup_substring_cut inherits the window-count
-    # frequency form (row-identical; hash-checked at sf0.01/sf0.1);
-    # q_holt_winters (new this round) reads its forecast indices via
-    # try_element_at so a <7-day type yields NULL like DuckDB instead
-    # of an ANSI crash. Plan shapes changed → re-check.
-    ("q_dedup_substring_cut", 15),
-    ("q_holt_winters", 15),
-    # r16 (ADVICE r15): q_kruskal_wallis squares the doubled rank sum
-    # in DOUBLE on both engines (was exact decimal(19,0)²/HUGEINT²,
-    # which overflowed divergently at 2Rᵢ ≈ 1e19). Bit-identical below
-    # 2^53 — every test SF — hash-checked at sf0.001/0.01/0.1;
-    # expression changed → re-check.
-    ("q_kruskal_wallis", 16),
-    # r16 (VERDICT r15 item 5): q_anova/q_brown_forsythe/q_cramers_v/
-    # q_forecast_backtest bodies extracted into *_stats/*_daily cores
-    # so scale_curve.py times the plans' own code — plan trees are
-    # UNCHANGED (pure function extraction), hash-checked at sf0.01;
-    # re-check anyway per the r15 refactor precedent.
-    ("q_anova", 16),
-    ("q_brown_forsythe", 16),
-    ("q_cramers_v", 16),
-    ("q_forecast_backtest", 16),
-    # r16: q_stream_upsert_sink's foreachBatch body now comes from the
-    # shared make_latest_upsert factory (same anti-join + union +
-    # atomic swap, extracted for the q_stream_tws_forecast composition)
-    # and the key snapshots + removes its per-call dir. Values
-    # invariant (same merge logic; pinned by the multi-batch contract
-    # test), hash-checked at sf0.01 — re-check anyway.
-    ("q_stream_upsert_sink", 16),
-    # r16 OPTIMIZATION round. TWS family: state partitions 4 → 8 (env-
-    # tunable), RocksDB changelog checkpointing, larger streaming Arrow
-    # transfer batches — values invariant by construction (per-key
-    # processors see all of a key's rows regardless of partition or
-    # Arrow framing; replay determinism unchanged), full-oracle
-    # parity re-proved at sf0.001+sf0.01 — re-check the heaviest four.
-    ("q_stream_tws_timer_list", 16),
-    ("q_stream_tws_recent_k", 16),
-    ("q_stream_tws_map_state", 16),
-    ("q_stream_tws_init_state", 16),
-    # r16 optimization: ivf_pq_ann persists the residual table across
-    # Lloyd rounds (same deterministic plan, one derivation instead of
-    # five); _bpe_rounds fuses the per-round top-pair and symbol-count
-    # jobs (same integers: n_symbols = total_pairs + Σf, min(struct) ≡
-    # the ORDER BY); the sampled-BFS walkers keep their visited set as
-    # a lazy union of checkpointed levels; q_anova's moment table is a
-    # lazy checkpoint (one action, two deterministic consumers —
-    # already queued above by its round-16 extraction entry). All
-    # hash-checked at sf0.001/sf0.01 — re-check.
-    ("q_ann_ivfpq", 16),
-    ("q_bpe_train", 16),
-    ("q_bpe_encode", 16),
-    ("q_betweenness_sampled", 16),
-    ("q_harmonic_centrality", 16),
-    # r16 optimization: q_ks_test pivots the k segments into columns
-    # of the per-value table so ONE two-pass prefix sum carries all
-    # k+1 cumulatives (was: k×|values| grid + a second partitioned
-    # pass). Identical doubles (same division shapes, NULL-prefix
-    # cumulatives coalesce to 0 exactly like the grid's missing
-    # cells); hash-checked at sf0.001/sf0.01 — re-check.
-    ("q_ks_test", 16),
-    # r17 optimization round. q_bootstrap_ci: the rn=2/rn=31 rank
-    # picks fused into one conditional aggregate over a single 32x
-    # expansion (was two broadcast subtrees re-deriving it), plus an
-    # explicit-width hash repartition on event_id before the md5
-    # sweep — replica sums are exact bigints, placement-independent.
-    # q_chunk_cdc / q_dedup_chunk_cross: hash repartition by doc_id
-    # before the boundary-window md5 sweep (per-doc deterministic).
-    # q_agg_percentile: repartition on l_orderkey before the exact-
-    # percentile buffering (count-map merge, order-independent).
-    # q_ks_test: output rows now built via explode(array(struct(lit)))
-    # instead of f-string stack() SQL (same order/values; ADVICE r16).
-    # All hash-checked at sf0.001/sf0.01 — re-check.
-    ("q_bootstrap_ci", 17),
-    ("q_chunk_cdc", 17),
-    ("q_dedup_chunk_cross", 17),
-    ("q_agg_percentile", 17),
-    ("q_ks_test", 17),
-    # r17 optimization (late batch): the per-row scalar-demo pipelines
-    # over the single-split lineitem scan ride spread_scan (q_math_fns,
-    # q_try_arith directly; q_haversine/q_unit_conv via _coords
-    # spread=True — their trig is the one-core cost; geofence and
-    # point_in_polygon measured flat/regressed and stay unspread).
-    # Per-row deterministic values, placement-independent; hash-checked
-    # at sf0.001/sf0.01 — re-check.
-    ("q_math_fns", 17),
-    ("q_try_arith", 17),
-    ("q_haversine", 17),
-    ("q_unit_conv", 17),
-)
-
-
-def _verification_state(
-    base_dir: str | None = None,
-) -> tuple[dict[str, int], set[str]]:
-    """Parse the committed correctness rounds. Returns
-    ``(hash_verified, any_row)``: for keys with at least one green
-    rows+schema+hash record, the LATEST round number that recorded one;
-    and keys with any driver record at all (including the rows-only
-    ``no_oracle`` kind — which is NOT verification, just a coverage
-    record). A missing or unparseable committed file raises —
-    best-effort parsing would make the order environment-dependent."""
-    import json
-    import re
-
-    here = base_dir or os.path.dirname(os.path.abspath(__file__))
-    hash_ok: dict[str, int] = {}
-    any_row: set[str] = set()
-    for fname in _COMMITTED_ROUNDS:
-        m = re.search(r"_r(\d+)\.json$", fname)
-        if m is None:  # a misnamed allowlist entry must fail by name (ADVICE r4)
-            raise ValueError(
-                f"committed correctness record {fname!r} does not match "
-                "'*_r<N>.json'; cannot derive its round number"
-            )
-        rnd = int(m.group(1))
-        path = os.path.join(here, fname)
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError) as ex:
-            raise RuntimeError(
-                f"committed correctness record {fname} unreadable: {ex}"
-            ) from ex
-        for key, row in data.items():
-            any_row.add(key)
-            if row.get("hash_match"):
-                hash_ok[key] = max(hash_ok.get(key, 0), rnd)
-    return hash_ok, any_row
-
-
-def _coverage_order(
-    keys: list[str], with_oracle: set[str], base_dir: str | None = None
-) -> list[str]:
-    """Deterministic emission order for a fixed-size verification window.
-
-    The driver checks a fixed-size prefix of this dict each round, so
-    emission order decides what gets (re-)verified. Policy, in rank
-    order, tie-broken alphabetically unless stated:
-
-    0. ``_CHANGED_SINCE_VERIFIED`` (in that explicit order), minus
-       self-pruned entries already re-verified at or after the round
-       they changed in: changed code must sort ahead of unverified
-       keys (ADVICE r3, high) so any nonzero verification window
-       re-checks it before first-time coverage;
-    1. keys still needing their first REAL driver record — never seen
-       by the driver at all, or oracle-equipped but only ever recorded
-       rows-only (a ``no_oracle`` row is not value verification; e.g.
-       q_pagerank, whose oracle landed after its rows-only records);
-    2. contract rows-only keys (no oracle exists) that already have
-       their record — re-running adds no information;
-    3. hash-verified, unchanged keys — ordered OLDEST verified round
-       first (then name), so stale greens (r1/r2 keys whose shared
-       helpers may have drifted) cycle back through spare window
-       slots instead of never being re-checked (VERDICT r5 item 6).
-
-    Every key keeps its name and oracle; only dict order changes, so a
-    driver that re-sorts keys is unaffected."""
-    hash_ok, any_row = _verification_state(base_dir)
-    changed_rank = {
-        k: i
-        for i, (k, round_changed) in enumerate(_CHANGED_SINCE_VERIFIED)
-        if hash_ok.get(k, 0) < round_changed  # self-prune once re-verified
-    }
-
-    def rank(k: str) -> tuple[int, int, str]:
-        if k in changed_rank:
-            return (0, changed_rank[k], k)
-        if k not in hash_ok and (k in with_oracle or k not in any_row):
-            return (1, 0, k)
-        if k not in hash_ok:
-            return (2, 0, k)
-        return (3, hash_ok[k], k)
-
-    return sorted(keys, key=rank)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (engine plan
-    registry; every computed column aliased to match the oracle), ordered
-    per the _coverage_order policy (unverified + changed first)."""
-    q = plans.queries()
-    return {k: q[k] for k in _coverage_order(list(q), set(plans.oracle_sql()))}
+    registry; every computed column aliased to match the oracle), in
+    sorted key order."""
+    return plans.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for EVERY registered query — as of
-    round 5 no key is rows-only (the last two, the ANN pair, gained
-    full oracles: their LSH planes / IVF quantizer are deterministic,
-    so the whole pipelines are re-derived in SQL). The contract's
-    rows-only escape hatch remains available but unused."""
-    o = plans.oracle_sql()
-    return {k: o[k] for k in _coverage_order(list(o), set(o))}
+    """DuckDB-runnable ANSI SQL twin for every registered query that has
+    one (today every key), in sorted key order."""
+    return plans.oracle_sql()

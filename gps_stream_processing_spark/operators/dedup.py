@@ -309,7 +309,7 @@ def winnow_seed_table(
 ) -> DataFrame:
     """(id, sh) winnowing-selected seed window digests — the SEED
     stage of :func:`substring_dedup_strided` (exposed separately so
-    scale_curve.py can time it alone): per doc, the stride-1 md5
+    it can be timed alone): per doc, the stride-1 md5
     window digests materialize once as a column, the leftmost-min of
     every ``winnow``-run is selected (content-defined, ~2/(w+1)
     density), and only the selected seeds explode."""

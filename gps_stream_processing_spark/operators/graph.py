@@ -331,10 +331,10 @@ def pagerank(
         # localCheckpoint, NOT repartition(key).persist(): checkpointing
         # does erase partitioning info (so each round re-shuffles e_deg),
         # but the partitioning-preserving persist variant measured SLOWER
-        # at sf0.1 (tools/bench_pagerank.py, medians of 3 interleaved
-        # trials: 4.9s vs 4.5s) — at this graph size the rounds are
-        # fixed-overhead bound, and cache scans cost more than the tiny
-        # re-shuffles they avoid. Re-measure before "fixing" this.
+        # at sf0.1 (medians of 3 interleaved trials: 4.9s vs 4.5s) —
+        # at this graph size the rounds are fixed-overhead bound, and
+        # cache scans cost more than the tiny re-shuffles they avoid.
+        # Re-measure before "fixing" this.
         .localCheckpoint(eager=True)
         # The per-round ranks × e_deg join when ranks does NOT broadcast:
         # e_deg is fact-sized (never broadcast itself — a generous
@@ -375,10 +375,10 @@ def pagerank(
         # Measured-and-rejected (r7): checkpointing every SECOND round
         # (5 jobs, the skipped round's 2-consumer subtree re-executed
         # inside the next job) — identical ranks, medians of 5
-        # interleaved trials at sf0.1: 5.46s vs 5.40s for this form
-        # (tools/bench_pagerank.py::pagerank_2per). Job-launch overhead
-        # at this SF is already below one round's compute, so halving
-        # the job count buys nothing and the extra re-execution costs.
+        # interleaved trials at sf0.1: 5.46s vs 5.40s for this form.
+        # Job-launch overhead at this SF is already below one round's
+        # compute, so halving the job count buys nothing and the extra
+        # re-execution costs.
         dist = (
             lhs.join(e_deg, ranks.id == e_deg.src)
             .select(F.col("dst"), (F.col("rank") / F.col("deg")).alias("contrib"))

@@ -79,8 +79,8 @@ def q_pmi_bigrams(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def pmi_bigrams(d: DataFrame, min_count: int = 5) -> DataFrame:
-    """PMI pipeline over any (doc_id, text) frame — reused by
-    scale_curve.py on replicated corpora."""
+    """PMI pipeline over any (doc_id, text) frame, so replicated
+    corpora run the shipped plan code as is."""
     toks = d.select(
         "doc_id", F.split(F.lower(F.col("text")), " ").alias("w")
     )
@@ -1073,9 +1073,9 @@ def q_kneser_ney(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def kneser_ney_stats(docs: DataFrame) -> DataFrame:
-    """The q_kneser_ney core over any (text) DataFrame — extracted so
-    scale_curve.py times the plan's OWN code (the _lttb_100b
-    discipline: measurement and shipped plan cannot desynchronize)."""
+    """The q_kneser_ney core over any (text) DataFrame — kept apart from
+    its table scans so the shipped plan code runs as is over any input
+    of that shape (scaled or replicated), never a copy."""
     toks = docs.select(
         F.split(F.lower(F.col("text")), " ").alias("w")
     )

@@ -434,12 +434,13 @@ def q_cap_per_group(spark: SparkSession, sf: str) -> DataFrame:
 
 def cap_per_group_stats(docs: DataFrame) -> DataFrame:
     """The q_cap_per_group core over any (source, doc_id, n_chars)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline). ONE window over the group key: the
-    rank<=50 filter triggers Catalyst's InferWindowGroupLimit, which
-    plans a Partial WindowGroupLimit below the Exchange — the
-    map-side per-group top-k that makes this the extreme-group-safe
-    plan natively (see the q_cap_per_group doc)."""
+    DataFrame — kept apart from its table scans so the shipped plan code
+    runs as is over any input of that shape (scaled or replicated),
+    never a copy. ONE window over the group key: the rank<=50 filter
+    triggers Catalyst's InferWindowGroupLimit, which plans a Partial
+    WindowGroupLimit below the Exchange — the map-side per-group top-k
+    that makes this the extreme-group-safe plan natively (see the
+    q_cap_per_group doc)."""
     from pyspark.sql import Window as W
 
     rk = F.row_number().over(

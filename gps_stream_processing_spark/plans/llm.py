@@ -1333,9 +1333,10 @@ def q_ann_binary(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def binary_ann_topk(emb: DataFrame) -> DataFrame:
-    """The q_ann_binary core over any (vec_id, v: array<double>)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    """The q_ann_binary core over any (vec_id, v: array<double>) DataFrame
+    — kept apart from its table scans so the shipped plan code runs as
+    is over any input of that shape (scaled or replicated), never a
+    copy."""
     dims = (
         emb.select(F.posexplode("v").alias("pos", "x"))
         .groupBy("pos")

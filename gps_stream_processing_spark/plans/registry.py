@@ -25,6 +25,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gps_stream_processing_spark.session import SESSION_CONF
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -60,11 +62,9 @@ def tune_session(spark: SparkSession, sf_dir: str) -> None:
     - shuffle width ∝ input bytes (clamped to [4, 2×cores]); AQE still
       coalesces below it at runtime. On a 1000-executor cluster the same
       rule yields thousands of partitions — it scales UP, not just down.
-    - Arrow transfer for every pandas boundary (toPandas / pandas UDFs).
-    - UTC session time — the engine's documented timestamp semantics
-      (DuckDB oracles compare naive-UTC; the reference's local-time
-      ``mktime`` is a documented divergence, class.nmea.parser.php:94).
-    - 64 MB broadcast threshold so every star-schema dim broadcasts.
+    - every conf in ``session.SESSION_CONF`` (AQE, UTC, Arrow transfer,
+      the 64 MB broadcast threshold, CBO), the same set ``get_spark``
+      builds with.
     """
     if spark.conf.get(_TUNED_MARKER, None) == sf_dir:
         return
@@ -87,31 +87,7 @@ def tune_session(spark: SparkSession, sf_dir: str) -> None:
     # COMPRESSED verification inputs so width never collapses below a
     # useful parallelism while bytes are tiny.
     parts = max(4, min(2 * cores, n_bytes // (1 << 20) + 1))
-    conf = {
-        "spark.sql.shuffle.partitions": str(parts),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        # Cost-based optimization ON for the session, the production
-        # posture. Both flags are inert for every path-based read (no
-        # catalog stats -> CBO falls back to the same size estimates,
-        # and joinReorder skips unless ALL joined relations carry row
-        # counts); they become load-bearing exactly for the ANALYZEd
-        # q_cbo_reorder star tables, where stats-driven reorder is the
-        # asserted behavior (tests/test_plans.py pins both the reorder
-        # and this inertness-without-stats control).
-        "spark.sql.cbo.enabled": "true",
-        "spark.sql.cbo.joinReorder.enabled": "true",
-        # Python DataSource filter pushdown (Spark 4.1, default off):
-        # inert for sources that don't implement pushFilters (the
-        # default implementation declines every filter); load-bearing
-        # for the nmea_synth track-pruning scan (q_custom_source_pushdown).
-        "spark.sql.python.filterPushdown.enabled": "true",
-    }
+    conf = {**SESSION_CONF, "spark.sql.shuffle.partitions": str(parts)}
     for k, v in conf.items():
         try:
             spark.conf.set(k, v)

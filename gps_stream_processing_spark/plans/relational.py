@@ -3474,9 +3474,9 @@ def q_cramers_v(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def cramers_v_stats(e: DataFrame) -> DataFrame:
-    """The q_cramers_v core over any (event_type, ts) DataFrame —
-    extracted so scale_curve.py times the plan's OWN code (the
-    _lttb_100b discipline)."""
+    """The q_cramers_v core over any (event_type, ts) DataFrame — kept
+    apart from its table scans so the shipped plan code runs as is over
+    any input of that shape (scaled or replicated), never a copy."""
     o = e.groupBy(
         "event_type", (F.dayofweek("ts") - 1).alias("dow")
     ).agg(F.count("*").alias("observed"))
@@ -3810,9 +3810,9 @@ def q_ks_test(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def ks_stats(b: DataFrame) -> DataFrame:
-    """The q_ks_test core over any (mktsegment, v: bigint) DataFrame —
-    extracted so scale_curve.py times the plan's OWN code (the
-    anova_stats discipline)."""
+    """The q_ks_test core over any (mktsegment, v: bigint) DataFrame — kept
+    apart from its table scans so the shipped plan code runs as is over
+    any input of that shape (scaled or replicated), never a copy."""
     # per-(segment, value) counts are the ONLY corpus-sized aggregate;
     # vals/segs both re-aggregate its output, so one eager checkpoint
     # pins the plan to a single orders⋈customer pass
@@ -3839,7 +3839,7 @@ def ks_stats(b: DataFrame) -> DataFrame:
     # coalesces to 0 exactly like the grid's missing-cell rows, and
     # the D-statistic divisions keep the double/bigint shape.
     # NULL-tolerant segment ordering (ADVICE r16): a NULL segment sorts
-    # first (DuckDB's NULLS FIRST ASC default) instead of crashing the
+    # last (DuckDB's NULLS LAST ASC default) instead of crashing the
     # tuple sort; the per-segment pivot below matches it via eqNullSafe.
     segs = sorted(
         (
@@ -3848,7 +3848,7 @@ def ks_stats(b: DataFrame) -> DataFrame:
             .agg(F.sum("cnt_seg").cast("bigint").alias("n1"))
             .collect()
         ),
-        key=lambda t: (t[0] is not None, t[0]),
+        key=lambda t: (t[0] is None, t[0]),
     )
     if not segs:  # empty input: empty result, same schema (ADVICE r16 —
         # int(totals[...]) below would raise on the all-NULL totals row)
@@ -4099,9 +4099,9 @@ def q_anova(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def anova_stats(b: DataFrame) -> DataFrame:
-    """The q_anova core over any (mktsegment, c: bigint) DataFrame —
-    extracted so scale_curve.py times the plan's OWN code (the
-    _lttb_100b discipline)."""
+    """The q_anova core over any (mktsegment, c: bigint) DataFrame — kept
+    apart from its table scans so the shipped plan code runs as is over
+    any input of that shape (scaled or replicated), never a copy."""
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     d19 = lambda col: col.cast("decimal(19,0)")  # noqa: E731
     c = F.col("c")
@@ -4229,9 +4229,10 @@ def q_brown_forsythe(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def brown_forsythe_stats(b: DataFrame) -> DataFrame:
-    """The q_brown_forsythe core over any (mktsegment, c: bigint)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    """The q_brown_forsythe core over any (mktsegment, c: bigint) DataFrame
+    — kept apart from its table scans so the shipped plan code runs as
+    is over any input of that shape (scaled or replicated), never a
+    copy."""
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     d19 = lambda col: col.cast("decimal(19,0)")  # noqa: E731
     med = b.groupBy("mktsegment").agg(
@@ -4365,9 +4366,10 @@ def q_kruskal_wallis(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def kruskal_wallis_stats(b: DataFrame) -> DataFrame:
-    """The q_kruskal_wallis core over any (mktsegment, v: bigint)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    """The q_kruskal_wallis core over any (mktsegment, v: bigint) DataFrame
+    — kept apart from its table scans so the shipped plan code runs as
+    is over any input of that shape (scaled or replicated), never a
+    copy."""
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     d19 = lambda col: col.cast("decimal(19,0)")  # noqa: E731
     segv = (
@@ -8148,8 +8150,8 @@ def q_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
     # former per-rank filters (rn=2 / rn=31) rode TWO separate
     # broadcast subtrees, each re-deriving the whole 32x md5 expansion
     # + range window from the parquet scan (ReuseExchange does not
-    # fire across independently-planned broadcast subqueries — see
-    # plans/r17/q_bootstrap_ci_before.txt: 3 scans, 2 Generates). ONE
+    # fire across independently-planned broadcast subqueries — the
+    # formatted plan showed 3 scans and 2 Generates). ONE
     # conditional aggregate picks both ranks from a single derivation:
     # exactly one row carries each rank (row_number is distinct), so
     # min(when(rn=k, m)) IS that row's m — values identical.
@@ -8795,7 +8797,7 @@ def q_trimmed_mean(spark: SparkSession, sf: str) -> DataFrame:
       -- translation-invariant (sxa*nb - sxb*na and sxa*nb - x*na*nb
       -- both cancel the lo*na*nb shift exactly), and the relative
       -- moments keep ~1e4x decimal headroom the absolute-µs form
-      -- exhausts at 16x density (measured overflow, scale_curve r14)
+      -- exhausts at 16x density (measured overflow, r14)
       SELECT e.x, e.x - bounds.lo AS xr, e.y, e.event_id,
              CAST(LEAST(99, (e.x - bounds.lo) * 100
                             // (bounds.hi - bounds.lo + 1)) AS BIGINT)
@@ -8869,10 +8871,10 @@ def lttb_best_points(e: DataFrame) -> DataFrame:
     """Mean-anchored LTTB core over an (``x`` µs, ``y`` cents,
     ``event_id``) frame: 100 fixed time buckets, per-bucket exact
     integer argmax of the triangle area vs the neighbor buckets' mean
-    anchors; returns (``bk``, ``p`` struct(x, y)). ONE definition —
-    the registry plan and scale_curve.py's harness shape both call
-    this, so a numeric fix cannot desynchronize them (r14 review:
-    the xr overflow fix had to be applied to two copies)."""
+    anchors; returns (``bk``, ``p`` struct(x, y)). ONE definition
+    over any input of that shape, so a numeric fix cannot
+    desynchronize two copies (r14 review: the xr overflow fix had to
+    be applied to two)."""
     from pyspark.sql import Window
 
     h = lambda col: col.cast("decimal(38,0)")  # noqa: E731
@@ -8882,7 +8884,7 @@ def lttb_best_points(e: DataFrame) -> DataFrame:
     # xr anchors x at the window start — areas are translation-
     # invariant (the lo*na*nb shift cancels in both factors exactly),
     # and relative-µs moments keep ~1e4x decimal headroom the
-    # absolute form exhausts at 16x density (measured, scale_curve)
+    # absolute form exhausts at 16x density (measured)
     b = e.crossJoin(F.broadcast(bounds)).select(
         "x",
         F.expr("x - lo").alias("xr"),
@@ -9217,9 +9219,9 @@ def q_sax(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sax_symbols(events: DataFrame) -> DataFrame:
-    """The q_sax core over any (ts, value) DataFrame — extracted so
-    scale_curve.py times the plan's OWN code (the _lttb_100b
-    discipline)."""
+    """The q_sax core over any (ts, value) DataFrame — kept apart from its
+    table scans so the shipped plan code runs as is over any input of
+    that shape (scaled or replicated), never a copy."""
     from pyspark.sql import Window
 
     d19 = lambda col: col.cast("decimal(19,0)")  # noqa: E731
@@ -9450,9 +9452,9 @@ def q_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def holt_winters_daily(e: DataFrame) -> DataFrame:
-    """The q_holt_winters core over any (event_type, ts, value)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    """The q_holt_winters core over any (event_type, ts, value) DataFrame —
+    kept apart from its table scans so the shipped plan code runs as is
+    over any input of that shape (scaled or replicated), never a copy."""
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(
@@ -9598,8 +9600,9 @@ def q_forecast_backtest(spark: SparkSession, sf: str) -> DataFrame:
 
 def forecast_backtest_daily(e: DataFrame) -> DataFrame:
     """The q_forecast_backtest core over any (event_type, ts, value)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    DataFrame — kept apart from its table scans so the shipped plan code
+    runs as is over any input of that shape (scaled or replicated),
+    never a copy."""
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(
@@ -10015,8 +10018,9 @@ def q_seasonal_decompose(spark: SparkSession, sf: str) -> DataFrame:
 
 def seasonal_decompose_daily(e: DataFrame) -> DataFrame:
     """The q_seasonal_decompose core over any (event_type, ts, value)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    DataFrame — kept apart from its table scans so the shipped plan code
+    runs as is over any input of that shape (scaled or replicated),
+    never a copy."""
     from pyspark.sql import Window
 
     daily = e.groupBy(
@@ -10177,8 +10181,8 @@ def q_friedman(spark: SparkSession, sf: str) -> DataFrame:
 
 def friedman_stats(e: DataFrame) -> DataFrame:
     """The q_friedman core over any (event_type, ts, value) DataFrame —
-    extracted so scale_curve.py times the plan's OWN code (the
-    _lttb_100b discipline)."""
+    kept apart from its table scans so the shipped plan code runs as is
+    over any input of that shape (scaled or replicated), never a copy."""
     from pyspark.sql import Window
 
     daily = e.groupBy(
@@ -10342,9 +10346,9 @@ def q_mann_kendall(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def mann_kendall_stats(e: DataFrame) -> DataFrame:
-    """The q_mann_kendall core over any (event_type, ts, value)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    """The q_mann_kendall core over any (event_type, ts, value) DataFrame —
+    kept apart from its table scans so the shipped plan code runs as is
+    over any input of that shape (scaled or replicated), never a copy."""
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(
@@ -10518,9 +10522,9 @@ def q_ljung_box(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def ljung_box_stats(e: DataFrame) -> DataFrame:
-    """The q_ljung_box core over any (event_type, ts, value)
-    DataFrame — extracted so scale_curve.py times the plan's OWN code
-    (the _lttb_100b discipline)."""
+    """The q_ljung_box core over any (event_type, ts, value) DataFrame —
+    kept apart from its table scans so the shipped plan code runs as is
+    over any input of that shape (scaled or replicated), never a copy."""
     from pyspark.sql import Window
 
     daily = e.groupBy(
@@ -10726,9 +10730,9 @@ def q_pacf(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def pacf_stats(e: DataFrame) -> DataFrame:
-    """The q_pacf core over any (event_type, ts, value) DataFrame —
-    extracted so scale_curve.py times the plan's OWN code (the
-    _lttb_100b discipline)."""
+    """The q_pacf core over any (event_type, ts, value) DataFrame — kept
+    apart from its table scans so the shipped plan code runs as is over
+    any input of that shape (scaled or replicated), never a copy."""
     from pyspark.sql import Window
 
     h = 7

@@ -15,8 +15,62 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Runtime SQL confs every engine session carries. get_spark builds with
+# them, and plans.registry.tune_session re-applies them to whatever
+# session a caller hands the registry, so both paths plan identically.
+SESSION_CONF: dict[str, str] = {
+    # AQE: runtime partition coalescing, skew-join splitting and
+    # broadcast demotion replace hand-tuned plans.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # UTC pins timestamp semantics: the reference's ``mktime`` was
+    # local-time (class.nmea.parser.php:94), DuckDB oracles compare
+    # naive-UTC.
+    "spark.sql.session.timeZone": "UTC",
+    # Every pandas boundary crossing (toPandas, pandas UDFs) is
+    # Arrow-batched.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # UDTFs too: ArrowEvalPythonUDTF replaces the row-at-a-time
+    # BatchEvalPythonUDTF (pickle per row) — measured equal at fixture
+    # scale, and Arrow batching is the only shape that survives real
+    # data volumes.
+    "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
+    # Small-dim broadcast threshold: every dim table in the star schema
+    # (region/nation/customer/supplier/part) broadcasts.
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Cost-based optimization, the production posture. Both flags are
+    # inert for every path-based read (no catalog stats -> CBO falls
+    # back to the same size estimates, and joinReorder skips unless ALL
+    # joined relations carry row counts); they become load-bearing
+    # exactly for the ANALYZEd q_cbo_reorder star tables, where
+    # stats-driven reorder is the asserted behavior (tests/test_plans.py
+    # pins both the reorder and this inertness-without-stats control).
+    "spark.sql.cbo.enabled": "true",
+    "spark.sql.cbo.joinReorder.enabled": "true",
+    # Python DataSource filter pushdown (Spark 4.1, default off): inert
+    # for sources that don't implement pushFilters (the default
+    # implementation declines every filter); load-bearing for the
+    # nmea_synth track-pruning scan (q_custom_source_pushdown).
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def default_driver_memory() -> str:
+    """Three quarters of physical RAM, capped at 16g. In local mode the
+    driver JVM hosts every executor thread AND all broadcast builds, so
+    the 1g Spark default OOMs a 64 MB-threshold broadcast long before
+    data does; a heap larger than the host's RAM would instead let the
+    JVM grow until the OS kills it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: not POSIX
+        return "16g"
+    return f"{min(16 << 10, (ram * 3 // 4) >> 20)}m"
 
 
 def get_spark(
@@ -25,45 +79,24 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine session.
+    """Build (or fetch) the engine session with :data:`SESSION_CONF`.
 
-    Scale notes (100 TB design):
-    - AQE on: runtime partition coalescing, skew-join splitting, and
-      broadcast demotion replace hand-tuned plans.
-    - ``spark.sql.shuffle.partitions`` is a *starting* width; AQE
-      coalesces. On a 1000-executor cluster this would be set to
-      2-3× total cores instead.
-    - UTC session timezone pins timestamp semantics (the reference's
-      ``mktime`` was local-time, ``class.nmea.parser.php:94``; we
-      standardize on UTC — documented divergence).
-    - Arrow enabled: every pandas boundary crossing is Arrow-batched.
+    ``spark.sql.shuffle.partitions`` is a *starting* width; AQE
+    coalesces. On a 1000-executor cluster this would be set to 2-3×
+    total cores instead.
     """
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        # In local mode the driver JVM hosts every executor thread AND
-        # all broadcast builds; the 1g default OOMs a 64 MB-threshold
-        # broadcast long before data does. Only effective for the first
-        # session in the process (the JVM is already up afterwards); on a
-        # cluster the deployment supplies executor/driver memory instead.
+        # Only effective for the first session in the process (the JVM
+        # is already up afterwards); on a cluster the deployment
+        # supplies executor/driver memory instead.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # UDTFs too: ArrowEvalPythonUDTF replaces the row-at-a-time
-        # BatchEvalPythonUDTF (pickle per row) — measured equal at
-        # fixture scale, and Arrow batching is the only shape that
-        # survives real data volumes.
-        .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        .config("spark.sql.shuffle.spill.compress", "true")
-        # Small-dim broadcast threshold: every dim table in the star
-        # schema (region/nation/customer/supplier/part) broadcasts.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(map=SESSION_CONF)
         .config("spark.ui.enabled", "false")
     )
     if master is not None:
@@ -77,11 +110,11 @@ def get_spark(
     # Worker-env injection for a discovered protobuf runtime (TWS
     # support) must land BEFORE the session's first Python function
     # wraps: a later sc.environment change re-keys the worker-daemon
-    # pool and discards every warmed worker (measured: bench.py's
-    # datasource/UDTF warm-ups were lost to a first-query injection —
+    # pool and discards every warmed worker (measured: warmed
+    # datasource/UDTF workers were lost to a first-query injection —
     # q_custom_datasource 0.77s -> 3.2s). No-op where protobuf is
     # native or absent. tune_session repeats the call for sessions not
-    # built through this factory (e.g. the driver harness's own).
+    # built through this factory (e.g. a caller's own).
     from gps_stream_processing_spark.streaming.protobuf_compat import (
         configure_worker_env,
         ensure_protobuf,

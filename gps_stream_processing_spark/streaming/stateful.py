@@ -117,13 +117,17 @@ def merge_lines(
     return evicted, cur_utc, cur_date
 
 
-def merge_fix_groups(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """``applyInPandasWithState`` wrapper around :func:`merge_lines`."""
-    (track_id,) = key
-    if state.exists:
-        cur_utc, cur_date, blob = state.get
+def merge_batch(
+    track_id: int,
+    pdfs: Iterator[pd.DataFrame],
+    state: tuple[str | None, str | None, str] | None,
+) -> tuple[list[dict], tuple[str | None, str | None, str]]:
+    """One micro-batch of one track, for BOTH stateful APIs: load the
+    stored ``STATE_SCHEMA`` tuple (``None`` for a new track), run
+    :func:`merge_lines` over the batch in ``line_no`` order, and return
+    (output rows, the state tuple to store)."""
+    if state is not None:
+        cur_utc, cur_date, blob = state
         records: dict[str, dict[str, Any]] = json.loads(blob)
     else:
         cur_utc, cur_date, records = None, None, {}
@@ -137,7 +141,16 @@ def merge_fix_groups(
     out = evicted + [
         _row_to_fix(track_id, utc, fields, False) for utc, fields in records.items()
     ]
-    state.update((cur_utc, cur_date, json.dumps(records)))
+    return out, (cur_utc, cur_date, json.dumps(records))
+
+
+def merge_fix_groups(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """``applyInPandasWithState`` wrapper around :func:`merge_batch`."""
+    (track_id,) = key
+    out, new_state = merge_batch(track_id, pdfs, state.get if state.exists else None)
+    state.update(new_state)
     if out:
         yield pd.DataFrame(out)
 
@@ -169,22 +182,9 @@ def make_fix_merge_processor():
 
         def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
             (track_id,) = key
-            if self._state.exists():
-                cur_utc, cur_date, blob = self._state.get()
-                records: dict[str, dict[str, Any]] = json.loads(blob)
-            else:
-                cur_utc, cur_date, records = None, None, {}
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                "line_no", kind="stable"
-            )
-            evicted, cur_utc, cur_date = merge_lines(
-                track_id, batch, cur_utc, cur_date, records
-            )
-            out = evicted + [
-                _row_to_fix(track_id, utc, fields, False)
-                for utc, fields in records.items()
-            ]
-            self._state.update((cur_utc, cur_date, json.dumps(records)))
+            prev = self._state.get() if self._state.exists() else None
+            out, new_state = merge_batch(track_id, rows, prev)
+            self._state.update(new_state)
             if out:
                 yield pd.DataFrame(out)
 

@@ -1,59 +1,13 @@
-
-
-def test_queries_order_policy():
-    """Emission-order policy (__spark_entry__._coverage_order): this
-    round's plan-changed keys come first in their declared re-check
-    order (changed code must precede first-time coverage — ADVICE r3),
-    then keys needing their first real driver record (alphabetical),
-    then recorded rows-only keys, then verified-unchanged keys —
-    every registry key exactly once, oracle_sql() in the same relative
-    order."""
+def test_queries_and_oracles_list_every_key_once_sorted():
+    """The driver contract lists each registry key exactly once, in
+    sorted key order, and pairs it with the registry's own oracle."""
     import __spark_entry__ as e
-    from gps_stream_processing_spark import plans
+    from gps_stream_processing_spark.plans import REGISTRY
 
-    ks = list(e.queries())
-    assert sorted(ks) == sorted(plans.queries())
-
-    hash_ok, any_row = e._verification_state()
-    with_oracle = set(plans.oracle_sql())
-    changed = [
-        k
-        for k, rnd in e._CHANGED_SINCE_VERIFIED
-        if k in set(ks) and hash_ok.get(k, 0) < rnd
-    ]
-    assert ks[: len(changed)] == changed
-    need_first = sorted(
-        k for k in ks
-        if k not in set(changed)
-        and k not in hash_ok
-        and (k in with_oracle or k not in any_row)
-    )
-    assert ks[len(changed) : len(changed) + len(need_first)] == need_first
-
-    osql = list(e.oracle_sql())
-    pos = {k: i for i, k in enumerate(ks)}
-    assert osql == sorted(osql, key=pos.__getitem__)
-
-
-def test_verification_state_fails_loudly_on_corrupt(tmp_path):
-    """A missing or unparseable committed correctness record must raise
-    (ADVICE r3): silently skipping one would make the emitted order
-    depend on local filesystem state."""
-    import os
-    import shutil
-
-    import pytest
-
-    import __spark_entry__ as e
-
-    here = os.path.dirname(os.path.abspath(e.__file__))
-    with pytest.raises(RuntimeError, match="unreadable"):
-        e._verification_state(base_dir=str(tmp_path))  # all missing
-    for fname in e._COMMITTED_ROUNDS:
-        shutil.copy(os.path.join(here, fname), tmp_path / fname)
-    (tmp_path / e._COMMITTED_ROUNDS[0]).write_text("{not json")
-    with pytest.raises(RuntimeError, match="unreadable"):
-        e._verification_state(base_dir=str(tmp_path))
+    assert list(e.queries()) == sorted(REGISTRY)
+    oracles = e.oracle_sql()
+    assert list(oracles) == sorted(k for k, q in REGISTRY.items() if q.oracle)
+    assert all(sql == REGISTRY[k].oracle for k, sql in oracles.items())
 
 
 def test_tws_key_presence_matches_capability():
@@ -121,126 +75,3 @@ def test_doc_counts_match_registry():
     gated = 0 if _tws_available() else len(TWS_GATED_KEYS)
     errs = check_counts.check(len(REGISTRY), gated)
     assert not errs, "; ".join(errs)
-
-
-def test_committed_rounds_allowlist_tracks_disk():
-    """_COMMITTED_ROUNDS must equal the FULL set of on-disk CORRECTNESS
-    records — including rounds newer than the allowlist's max. A
-    forgotten allowlist update silently freezes the emission order on
-    stale state AND leaves _CHANGED_SINCE_VERIFIED entries unable to
-    self-prune, wasting next-round window slots (VERDICT r15 item 1:
-    the chore was forgotten four consecutive rounds; this test makes
-    the new round's first pytest run fail until the new record is
-    allowlisted)."""
-    import glob
-    import os
-
-    import __spark_entry__ as e
-
-    here = os.path.dirname(os.path.abspath(e.__file__))
-    on_disk = {
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-    }
-    missing = on_disk - set(e._COMMITTED_ROUNDS)
-    assert not missing, (
-        f"CORRECTNESS records on disk but absent from _COMMITTED_ROUNDS: "
-        f"{sorted(missing)} — extend the allowlist in __spark_entry__.py "
-        "(two-minute chore; see VERDICT r15 item 1)"
-    )
-    assert on_disk == set(e._COMMITTED_ROUNDS)
-
-
-def test_changed_keys_self_prune_after_reverification(tmp_path, monkeypatch):
-    """A _CHANGED_SINCE_VERIFIED entry must drop out of rank 0 once a
-    committed record carries a hash-green row for that key from the
-    round it changed in (or later) — a forgotten manual prune must not
-    waste verification-window slots forever. Synthetic fixtures: the
-    repo's live lists self-prune as rounds commit, so the test must not
-    depend on their current contents (r4's entries pruned the moment
-    CORRECTNESS_r04.json entered the allowlist)."""
-    import json
-
-    import __spark_entry__ as e
-
-    changed = (("q_changed_a", 2), ("q_changed_b", 2))
-    changed_keys = [k for k, _ in changed]
-    green = {
-        "rows_match": True, "schema_match": True, "hash_match": True,
-        "spark_rows": 1, "oracle_rows": 1, "err": None,
-    }
-    # r1: both keys green BEFORE their change round — must NOT prune.
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({k: dict(green) for k in changed_keys})
-    )
-    monkeypatch.setattr(e, "_CHANGED_SINCE_VERIFIED", changed)
-    monkeypatch.setattr(e, "_COMMITTED_ROUNDS", ("CORRECTNESS_r01.json",))
-
-    keys = sorted(set(changed_keys) | {"zz_other"})
-    with_oracle = set(keys)
-    before = e._coverage_order(keys, with_oracle, base_dir=str(tmp_path))
-    assert before[: len(changed_keys)] == changed_keys
-
-    # Simulate the changed-in round's driver output going green: a
-    # record file named for the change round carrying a hash-green row
-    # for every changed key, allowlisted.
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({k: dict(green) for k in changed_keys})
-    )
-    monkeypatch.setattr(
-        e,
-        "_COMMITTED_ROUNDS",
-        ("CORRECTNESS_r01.json", "CORRECTNESS_r02.json"),
-    )
-    after = e._coverage_order(keys, with_oracle, base_dir=str(tmp_path))
-    # pruned: changed keys are now ordinary verified keys, so the
-    # never-verified zz_other must sort ahead of all of them
-    assert after.index("zz_other") == 0
-    for k in changed_keys:
-        assert after.index(k) > 0
-
-
-def test_misnamed_allowlist_entry_fails_by_name(tmp_path, monkeypatch):
-    """An allowlist entry that doesn't match '*_r<N>.json' must raise a
-    ValueError naming the file, not an AttributeError on a failed regex
-    (ADVICE r4)."""
-    import pytest
-
-    import __spark_entry__ as e
-
-    monkeypatch.setattr(e, "_COMMITTED_ROUNDS", ("CORRECTNESS_final.json",))
-    with pytest.raises(ValueError, match="CORRECTNESS_final.json"):
-        e._verification_state(base_dir=str(tmp_path))
-
-
-def test_tier3_orders_oldest_verified_first(tmp_path, monkeypatch):
-    """Within tier 3 (hash-verified, unchanged), keys verified in an
-    OLDER round must sort ahead of ones re-verified recently, so stale
-    greens cycle back through spare verification-window slots instead
-    of never being re-checked (VERDICT r5 item 6)."""
-    import json
-
-    import __spark_entry__ as e
-
-    green = {
-        "rows_match": True, "schema_match": True, "hash_match": True,
-        "spark_rows": 1, "oracle_rows": 1, "err": None,
-    }
-    # q_old green only in r1; q_new green in r1 AND re-verified in r3:
-    # latest-green round decides, so q_old (r1) precedes q_new (r3)
-    # even though alphabetically q_new < q_old.
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"q_old": dict(green), "q_new": dict(green)})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps({"q_new": dict(green)})
-    )
-    monkeypatch.setattr(e, "_CHANGED_SINCE_VERIFIED", ())
-    monkeypatch.setattr(
-        e,
-        "_COMMITTED_ROUNDS",
-        ("CORRECTNESS_r01.json", "CORRECTNESS_r03.json"),
-    )
-    keys = ["q_new", "q_old", "q_unseen"]
-    order = e._coverage_order(keys, set(keys), base_dir=str(tmp_path))
-    assert order == ["q_unseen", "q_old", "q_new"]

@@ -261,7 +261,7 @@ def test_scan_stage_parallelism_pins(spark):
     of running single-core behind the scan. Values are placement-
     independent by construction for all three (exact bigint sums,
     per-doc deterministic chunking, count-map percentile merge)."""
-    for name in ("q_chunk_cdc", "q_agg_percentile"):
+    for name in ("q_chunk_cdc", "q_dedup_chunk_cross", "q_agg_percentile"):
         plan = _plan_of(REGISTRY[name].fn(spark, SF))
         assert "REPARTITION_BY_NUM" in plan, (
             f"{name}: the scan-stage parallelising repartition is gone"
@@ -273,7 +273,7 @@ def test_bootstrap_ci_single_expansion(spark):
     expansion ONCE — one Generate (explode) and at most two parquet
     scans (base aggregate + expansion) in the returned plan; the old
     rn=2 / rn=31 broadcast-subtree pair carried a second expansion
-    (see plans/r17/q_bootstrap_ci_{before,after}.txt)."""
+    (its formatted plan showed 3 scans and 2 Generates)."""
     import re
 
     plan = _plan_of(REGISTRY["q_bootstrap_ci"].fn(spark, SF))

@@ -305,6 +305,51 @@ def test_tune_session_covers_sibling_sessions(spark):
         sib.conf.unset(registry._TUNED_MARKER)
 
 
+def test_get_spark_and_tune_session_apply_one_session_conf(spark):
+    """get_spark builds with session.SESSION_CONF and tune_session
+    re-applies it: a fresh get_spark session (its own process, so the
+    builder really creates it) and a tune_session'd sibling whose every
+    SESSION_CONF key was first set elsewhere agree on every key. The
+    fresh process also shows the default driver heap fits the host."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from gps_stream_processing_spark.plans import registry
+    from gps_stream_processing_spark.session import SESSION_CONF
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import json\n"
+        "from gps_stream_processing_spark.session import SESSION_CONF, get_spark\n"
+        "s = get_spark(master='local[1]')\n"
+        "conf = {k: s.conf.get(k) for k in SESSION_CONF}\n"
+        "rt = s.sparkContext._jvm.java.lang.Runtime.getRuntime()\n"
+        "conf['heap'] = rt.maxMemory()\n"
+        "print(json.dumps(conf))\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_MEM"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    fresh = json.loads(out.strip().splitlines()[-1])
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < fresh.pop("heap") < ram
+
+    sib = spark.newSession()
+    try:
+        for k, v in SESSION_CONF.items():
+            sib.conf.set(k, {"true": "false", "UTC": "America/New_York"}.get(v, "-1"))
+        registry.tune_session(sib, SF)
+        tuned = {k: sib.conf.get(k) for k in SESSION_CONF}
+    finally:
+        sib.conf.unset(registry._TUNED_MARKER)
+    assert fresh == tuned == SESSION_CONF
+
+
 def test_lateral_join_decorrelates_to_window_group_limit(spark):
     """The correlated LATERAL top-2 subquery must NOT execute per row:
     Catalyst rewrites it to WindowGroupLimit (partial top-k before the

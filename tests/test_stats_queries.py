@@ -47,6 +47,25 @@ def test_ks_bounds_and_counts(spark):
         assert r.n_seg == int((base["seg"] == r.mktsegment).sum())
 
 
+def test_ks_segment_order_puts_null_last(spark):
+    """A NULL segment is emitted last, in DuckDB's ORDER BY order
+    (NULLS LAST is its ASC default), and does not crash the sort."""
+    from gps_stream_processing_spark.plans.relational import ks_stats
+
+    b = spark.createDataFrame(
+        [("B", 3), (None, 1), ("A", 2), ("A", 5), (None, 4), ("B", 1)],
+        "mktsegment string, v bigint",
+    )
+    got = [r.mktsegment for r in ks_stats(b).collect()]
+    want = [
+        r[0]
+        for r in duckdb.sql(
+            "SELECT s FROM (VALUES ('B'), (NULL), ('A')) t(s) ORDER BY s"
+        ).fetchall()
+    ]
+    assert got == want == ["A", "B", None]
+
+
 def test_ks_matches_numpy_replica(spark):
     """Exact ECDF sup-difference replica (evaluated at every pooled
     point — where the sup is attained)."""

@@ -98,8 +98,7 @@ def test_arrow_beats_pandas_wall_time_all_users(spark):
     assert the best-of-3 Arrow pass is not meaningfully slower
     (measured ~3-7x faster; the <= 1.5x gate only fails on a true
     inversion, not on noise — best-of-N makes a lone GC pause or CI
-    load spike on either side unable to flake it, the scale_curve
-    timed() discipline; ADVICE r14)."""
+    load spike on either side unable to flake it; ADVICE r14)."""
     views, clicks = _sides(spark, SF_ORACLE, sliced=False)
     # warm: scans cached, python workers spawned on both transports
     _pandas_path(views, clicks).toPandas()

@@ -30,7 +30,7 @@ REPO = Path(__file__).resolve().parent.parent
 _SITES = (
     ("README.md", "queries() entry count", r"`queries\(\)` entry — (\d+) queries"),
     ("README.md", "differential sweep", r"full (\d+)-query differential sweep"),
-    ("README.md", "bench coverage", r"All (\d+) queries"),
+    ("README.md", "oracle coverage", r"All (\d+) queries"),
     (
         "SURVEY.md",
         "registry size",
