@@ -9,7 +9,8 @@ Reference lifecycle (``class.nmea.parser.php``):
 
 Spark re-expression:
 
-    stage 1  ``parse_sentences``  — narrow map: demux + typed extraction.
+    stage 1  ``parse_sentences``  — narrow map: demux + a projection
+             driven by one token-position table (``FIELD_TOKENS``).
              Pure column expressions; whole-stage codegen; unknown
              sentence types dropped exactly like the ``default: return``
              at ``:112``.
@@ -20,8 +21,10 @@ Spark re-expression:
              single-partition sort (SURVEY §4.2 watch list).
     stage 3  ``merge_fixes``      — one row per (track_id, fix-second):
              "last non-null wins by arrival order", the reference's
-             overwrite-merge, computed with full-frame ordered windows
-             in a single shuffle on (track_id, utc).
+             overwrite-merge, computed with full-frame ordered windows.
+
+Read (``read_nmea_text``), fill, merge and the flagship aggregate share
+one hash(``track_id``) shuffle.
 
 Deliberate divergences from reference defects (SURVEY §5.1):
  - GSV multi-part satellites are ACCUMULATED (ref overwrites, ``:261-272``
@@ -45,7 +48,41 @@ from gps_stream_processing_spark.functions.nmea import (
     strip_fractional_seconds,
 )
 
-KNOWN_TYPES = ("GPGGA", "GPGLL", "GPGSA", "GPGSV", "GPRMC", "GPVTG")
+# Every handler's token layout: field → (type, {sentence type: token
+# index}); token 0 is the sentence name, as in ``explode(",", $line)``.
+# Handlers: GPGGA ``:170-188``, GPGLL ``:201-207``, GPGSA ``:224-244``,
+# GPGSV ``:262-272``, GPRMC ``:289-302``, GPVTG ``:317-328``.
+FIELD_TOKENS: dict[str, tuple[str, dict[str, int]]] = {
+    # GGA :172 / RMC :291 / GLL :204 — GLL keys its own time (defect fix)
+    "utc": ("string", {"GPGGA": 1, "GPRMC": 1, "GPGLL": 5}),
+    "date": ("string", {"GPRMC": 9}),  # ddmmyy (:297)
+    # GPGLL layout is lat,N,lon,W,utc,status (:191 golden)
+    "lat": ("double", {"GPGGA": 2, "GPGLL": 1, "GPRMC": 3}),
+    "lat_hem": ("string", {"GPGGA": 3, "GPGLL": 2, "GPRMC": 4}),
+    "lon": ("double", {"GPGGA": 4, "GPGLL": 3, "GPRMC": 5}),
+    "lon_hem": ("string", {"GPGGA": 5, "GPGLL": 4, "GPRMC": 6}),
+    "alt_m": ("double", {"GPGGA": 9}),  # (:182)
+    "geoid_sep_m": ("double", {"GPGGA": 11}),  # (:184)
+    "gps_qual": ("int", {"GPGGA": 6}),  # (:179)
+    "num_sat": ("int", {"GPGGA": 7}),  # (:180)
+    "hdop": ("double", {"GPGGA": 8, "GPGSA": 16}),  # (:181, :242)
+    "pdop": ("double", {"GPGSA": 15}),  # (:241)
+    "vdop": ("double", {"GPGSA": 17}),  # (:243)
+    "select_mode": ("string", {"GPGSA": 1}),  # (:227)
+    "fix_mode": ("string", {"GPGSA": 2}),  # (:228)
+    "sats_in_view": ("int", {"GPGSV": 3}),  # (:267)
+    "gsv_msgnum": ("int", {"GPGSV": 2}),  # (:266)
+    "status": ("string", {"GPGLL": 6}),  # (:206)
+    "status_rmc": ("string", {"GPRMC": 2}),  # (:294)
+    "speed_knots": ("double", {"GPRMC": 7, "GPVTG": 5}),  # (:295, :324)
+    "speed_kmh": ("double", {"GPVTG": 7}),  # (:326); GPRMC derives it from knots
+    "track_deg_true": ("double", {"GPRMC": 8, "GPVTG": 1}),  # (:296, :320)
+    "track_deg_mag": ("double", {"GPVTG": 3}),  # (:322)
+    "mag_var": ("double", {"GPRMC": 10}),  # (:298)
+    "mag_var_dir": ("string", {"GPRMC": 11}),  # (:299)
+}
+
+KNOWN_TYPES = tuple(sorted({s for _, pos in FIELD_TOKENS.values() for s in pos}))
 
 # Scalar fix fields produced by stage 1 and merged "last non-null wins"
 # in stage 3 (field census: SURVEY §1.2).
@@ -75,19 +112,11 @@ _SCALAR_FIELDS = (
 )
 
 
-def _tok(toks: Column, i: int) -> Column:
-    """Token i of the comma-split body; blank → null. ``F.get`` (not
-    ``getItem``) so short/malformed sentences yield null, not an ANSI
-    out-of-bounds error."""
-    return F.nullif(F.trim(F.get(toks, i)), F.lit(""))
-
-
-def _num(toks: Column, i: int) -> Column:
-    return _tok(toks, i).try_cast("double")
-
-
-def _int(toks: Column, i: int) -> Column:
-    return _tok(toks, i).try_cast("int")
+def _field(stype: Column, toks: Column, kind: str, pos: dict[str, int]) -> Column:
+    """Token ``pos[stype]`` (``F.get``: out of range → null, not an ANSI
+    error), then one ``try_cast``."""
+    tok = F.get(toks, F.create_map(*[F.lit(v) for kv in pos.items() for v in kv])[stype])
+    return tok if kind == "string" else tok.try_cast(kind)
 
 
 def data_status(s: Column) -> Column:
@@ -100,44 +129,33 @@ def parse_sentences(lines: DataFrame) -> DataFrame:
     """Demux + typed per-sentence extraction (stage 1).
 
     Input: ``NMEA_LINE_SCHEMA`` (line_no, track_id, value). Output: one
-    sparse wide row per recognized sentence. Token positions mirror the
-    reference handlers: GPGGA ``:170-188``, GPGLL ``:201-207``, GPGSA
-    ``:224-244``, GPGSV ``:262-272``, GPRMC ``:289-302``, GPVTG
-    ``:317-328`` (token 0 is the sentence name itself, as in the
-    reference's ``explode(",", $line)``).
+    sparse wide row per recognized sentence. The body is split once and
+    each token trimmed and blank-nulled once; each scalar field is one
+    ``FIELD_TOKENS`` lookup into those tokens, and the GSA PRN list and
+    GSV satellite groups are arrays built from them.
     """
-    stype = sentence_type(F.col("value"))
+    stype, t = F.col("stype"), F.col("toks")
     df = (
         lines.filter(F.col("value").startswith("$"))
-        .withColumn("stype", stype)
-        .filter(F.col("stype").isin(*KNOWN_TYPES))  # default: return (:112)
-        .withColumn("toks", F.split(nmea_body(F.col("value")), ","))
+        .withColumn("stype", sentence_type(F.col("value")))
+        .filter(stype.isin(*KNOWN_TYPES))  # default: return (:112)
+        .withColumn("toks", F.transform(F.split(nmea_body(F.col("value")), ","),
+                                        lambda x: F.nullif(F.trim(x), F.lit(""))))
+        .select("line_no", "track_id", "stype", "toks",
+                *[_field(stype, t, k, pos).alias(n) for n, (k, pos) in FIELD_TOKENS.items()])
     )
-    t = F.col("toks")
-    is_gga = F.col("stype") == "GPGGA"
-    is_gll = F.col("stype") == "GPGLL"
-    is_gsa = F.col("stype") == "GPGSA"
-    is_gsv = F.col("stype") == "GPGSV"
-    is_rmc = F.col("stype") == "GPRMC"
-    is_vtg = F.col("stype") == "GPVTG"
+    # Non-finite numbers (1e309, NaN) → null; Spark orders NaN above +inf.
+    # Its own projection, so each cast is evaluated once, not twice.
+    c = {n: F.when(F.abs(n) < F.lit(float("inf")), F.col(n)) if k == "double" else F.col(n)
+         for n, (k, _) in FIELD_TOKENS.items()}
 
-    utc_raw = (
-        F.when(is_gga | is_rmc, _tok(t, 1)).when(is_gll, _tok(t, 5))
-    )  # GGA :172 / RMC :291 / GLL :204 — GLL keys its own time (defect fix)
-    lat_raw = F.when(is_gga | is_gll, _num(t, 2)).when(is_rmc, _num(t, 3))
-    lat_hem = F.when(is_gga | is_gll, _tok(t, 3)).when(is_rmc, _tok(t, 4))
-    lon_raw = F.when(is_gga, _num(t, 4)).when(is_gll, _num(t, 4)).when(is_rmc, _num(t, 5))
-    lon_hem = F.when(is_gga | is_gll, _tok(t, 5)).when(is_rmc, _tok(t, 6))
-    # GPGLL layout is lat,N,lon,W,utc,status (:191 golden) — lon at 3/4:
-    lat_raw = F.when(is_gll, _num(t, 1)).otherwise(lat_raw)
-    lat_hem = F.when(is_gll, _tok(t, 2)).otherwise(lat_hem)
-    lon_raw = F.when(is_gll, _num(t, 3)).otherwise(lon_raw)
-    lon_hem = F.when(is_gll, _tok(t, 4)).otherwise(lon_hem)
+    def pick(*names: str) -> list[Column]:
+        return [c[n].alias(n) for n in names]
 
     # GPGSV: up to 4 (prn, elev, azim, snr) groups per part (:262-272);
     # kept as an array so stage 3 can ACCUMULATE across parts.
     sat_info_part = F.when(
-        is_gsv,
+        stype == "GPGSV",
         F.filter(
             F.transform(
                 F.sequence(F.lit(0), F.lit(3)),
@@ -153,42 +171,28 @@ def parse_sentences(lines: DataFrame) -> DataFrame:
     )
 
     return df.select(
-        "line_no",
-        "track_id",
-        "stype",
-        strip_fractional_seconds(utc_raw).alias("utc"),  # fixUTC (:391-394)
-        F.when(is_rmc, _tok(t, 9)).alias("date"),  # ddmmyy (:297)
-        degree2decimal(lat_raw, lat_hem).alias("lat"),  # (:339-351)
-        degree2decimal(lon_raw, lon_hem).alias("lon"),
-        F.when(is_gga, _num(t, 9)).alias("alt_m"),  # (:182)
-        F.when(is_gga, _num(t, 11)).alias("geoid_sep_m"),  # (:184)
-        F.when(is_gga, _int(t, 6)).alias("gps_qual"),  # (:179)
-        F.when(is_gga, _int(t, 7)).alias("num_sat"),  # (:180)
-        F.when(is_gga, _num(t, 8)).when(is_gsa, _num(t, 16)).alias("hdop"),  # (:181,:242)
-        F.when(is_gsa, _num(t, 15)).alias("pdop"),  # (:241)
-        F.when(is_gsa, _num(t, 17)).alias("vdop"),  # (:243)
-        F.when(is_gsa, _tok(t, 1)).alias("select_mode"),  # (:227)
-        F.when(is_gsa, _tok(t, 2)).alias("fix_mode"),  # (:228)
+        "line_no", "track_id", "stype",
+        strip_fractional_seconds(c["utc"]).alias("utc"),  # fixUTC (:391-394)
+        *pick("date"),
+        degree2decimal(c["lat"], c["lat_hem"]).alias("lat"),  # (:339-351)
+        degree2decimal(c["lon"], c["lon_hem"]).alias("lon"),
+        *pick("alt_m", "geoid_sep_m", "gps_qual", "num_sat", "hdop", "pdop", "vdop",
+              "select_mode", "fix_mode"),
         F.when(
-            is_gsa,
+            stype == "GPGSA",
             F.filter(
-                F.transform(F.slice(t, 4, 12), lambda x: F.nullif(F.trim(x), F.lit("")).try_cast("int")),
+                F.transform(F.slice(t, 4, 12), lambda x: x.try_cast("int")),
                 lambda x: x.isNotNull(),
             ),
         ).alias("sat_prns"),  # sat1..sat12 (:229-240) as array, nulls dropped
-        F.when(is_gsv, _int(t, 3)).alias("sats_in_view"),  # (:267)
-        F.when(is_gsv, _int(t, 2)).alias("gsv_msgnum"),  # (:266)
+        *pick("sats_in_view", "gsv_msgnum"),
         sat_info_part.alias("sat_info_part"),
-        F.when(is_gll, data_status(_tok(t, 6))).alias("status"),  # (:206)
-        F.when(is_rmc, _tok(t, 2)).alias("status_rmc"),  # (:294)
-        F.when(is_rmc, _num(t, 7)).when(is_vtg, _num(t, 5)).alias("speed_knots"),  # (:295,:324)
-        F.when(is_vtg, _num(t, 7))
-        .when(is_rmc, F.round(knots_to_kmh(_num(t, 7)), 1))
-        .alias("speed_kmh"),  # (:326; kmh = knots × 1.852)
-        F.when(is_rmc, _num(t, 8)).when(is_vtg, _num(t, 1)).alias("track_deg_true"),  # (:296,:320)
-        F.when(is_vtg, _num(t, 3)).alias("track_deg_mag"),  # (:322)
-        F.when(is_rmc, _num(t, 10)).alias("mag_var"),  # (:298)
-        F.when(is_rmc, _tok(t, 11)).alias("mag_var_dir"),  # (:299)
+        data_status(c["status"]).alias("status"),
+        *pick("status_rmc", "speed_knots"),
+        F.when(stype == "GPRMC", F.round(knots_to_kmh(c["speed_knots"]), 1))
+        .otherwise(c["speed_kmh"])
+        .alias("speed_kmh"),  # kmh = knots × 1.852
+        *pick("track_deg_true", "track_deg_mag", "mag_var", "mag_var_dir"),
     )
 
 

@@ -10,9 +10,12 @@ per-sentence tokenize/project (``:170-328``), ``degree2decimal``
 ``NMEAtoUnixTime`` (``:86-95``) — **independently in SQL**, so the NMEA
 queries get full value-hash oracles instead of rows-only checks.
 
-Every expression mirrors ``operators/gps_fix.py`` token for token (Spark
-0-based ``F.get(toks, i)`` == DuckDB 1-based ``t[i+1]``); rounding is
-identical on both sides (``round(_, 6)``).
+Token positions are spelled out here on purpose, handler by handler,
+rather than read from ``operators/gps_fix.FIELD_TOKENS``: this module is
+the independent check of that table, so it imports nothing from the
+program's parse (Spark 0-based ``F.get(toks, i)`` == DuckDB 1-based
+``t[i+1]``). Rounding is identical on both sides (``round(_, 6)``), and
+so is the non-finite rule: a numeric token that is ±inf or NaN is null.
 """
 
 from __future__ import annotations
@@ -26,7 +29,9 @@ def _tok(i: int) -> str:
 
 
 def _num(i: int) -> str:
-    return f"try_cast({_tok(i)} AS DOUBLE)"
+    """Token ``i`` as a finite DOUBLE; ±inf and NaN → null."""
+    x = f"try_cast({_tok(i)} AS DOUBLE)"
+    return f"CASE WHEN isfinite({x}) THEN {x} END"
 
 
 def _int(i: int) -> str:

@@ -296,20 +296,15 @@ def write_nmea_fixture(spark: SparkSession, path: str, **kwargs) -> None:
 
 
 def read_nmea_text(spark: SparkSession, path: str) -> DataFrame:
-    """Batch text scan → NMEA_LINE_SCHEMA. ``track_id`` derives from the
-    input file (one receiver per file); ``line_no`` is the in-file
-    arrival order — both computed without a shuffle."""
+    """Batch text scan → NMEA_LINE_SCHEMA. ``track_id`` is the hash of
+    the input file (one receiver per file); ``line_no`` is the in-file
+    arrival order, numbered in hash(``track_id``) partitions — the one
+    shuffle the fill, merge and flagship aggregate downstream reuse."""
     from pyspark.sql import functions as F, Window as W
 
-    raw = spark.read.text(path).select(
-        F.input_file_name().alias("file"), F.col("value")
-    )
-    w = W.partitionBy("file").orderBy(F.monotonically_increasing_id())
-    return raw.select(
-        F.row_number().over(w).cast("long").alias("line_no"),
-        F.xxhash64("file").alias("track_id"),
-        "value",
-    )
+    raw = spark.read.text(path).select(F.xxhash64(F.input_file_name()).alias("track_id"), "value")
+    w = W.partitionBy("track_id").orderBy(F.monotonically_increasing_id())
+    return raw.select(F.row_number().over(w).cast("long").alias("line_no"), "track_id", "value")
 
 
 def read_nmea_stream(spark: SparkSession, path: str) -> DataFrame:

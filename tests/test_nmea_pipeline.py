@@ -244,15 +244,10 @@ class TestCompatFacade:
         assert p.DumpNmea() == {}  # the GGA fix has 8 sats
 
 
-def test_fuzz_garbage_and_mutated_sentences(spark):
-    """1500 fuzzed lines (random ASCII garbage, truncated/mutated golden
-    sentences, blank fields, wrong checksums) must flow through the full
-    pipeline without throwing (ANSI mode is ON — any non-try cast would
-    fail this), and the surviving fixes must satisfy basic invariants."""
+def _fuzz_lines() -> list[str]:
+    """1500 fuzzed lines: random ASCII garbage, truncated/mutated golden
+    sentences, blank fields, wrong checksums, and the goldens as-is."""
     import random
-
-    from gps_stream_processing_spark.operators.gps_fix import gps_fix_pipeline
-    from gps_stream_processing_spark.schemas import NMEA_LINE_SCHEMA
 
     rng = random.Random(1234)
     golden = [
@@ -278,8 +273,15 @@ def test_fuzz_garbage_and_mutated_sentences(spark):
             lines.append(",".join(toks))
         else:  # golden as-is (so some fixes survive)
             lines.append(rng.choice(golden))
+    return lines
+
+
+def test_fuzz_garbage_and_mutated_sentences(spark):
+    """The fuzzed lines must flow through the full pipeline without
+    throwing (ANSI mode is ON — any non-try cast would fail this), and
+    the surviving fixes must satisfy basic invariants."""
     df = spark.createDataFrame(
-        [(i, i % 7, ln) for i, ln in enumerate(lines)], NMEA_LINE_SCHEMA
+        [(i, i % 7, ln) for i, ln in enumerate(_fuzz_lines())], NMEA_LINE_SCHEMA
     )
     rows = gps_fix_pipeline(df).collect()  # must not raise
     assert rows, "golden lines should still produce fixes"
@@ -289,6 +291,75 @@ def test_fuzz_garbage_and_mutated_sentences(spark):
             assert -90.5 <= r["lat"] <= 90.5
         if r["lon"] is not None:
             assert -180.5 <= r["lon"] <= 180.5
+
+
+# Non-finite numeric tokens in every handler that reads doubles: each
+# must parse to null, the same rule as the DuckDB twin.
+NON_FINITE_LINES = [
+    "$GPGGA,123519,1e309,N,-1e309,E,1,08,NaN,1e309,M,-1e309,M,,*47",
+    "$GPGLL,NaN,N,1e309,W,225444,A,*1D",
+    "$GPRMC,123519,A,-1e309,S,NaN,W,1e309,NaN,230394,-1e309,W*6A",
+    "$GPGSA,A,3,04,05,,09,12,,,24,,,,,1e309,NaN,-1e309*39",
+    "$GPVTG,NaN,T,1e309,M,-1e309,N,NaN,K*48",
+]
+
+
+def test_parse_matches_oracle_per_sentence(spark):
+    """``parse_sentences`` == the DuckDB twin's per-sentence ``parsed``
+    relation, row by row on ``line_no``, over every column it has
+    (arrays as sizes). Input: the committed fixture, the fuzz corpus and
+    non-finite tokens. The merged-fix oracles only see the value that
+    wins the merge, so a per-sentence divergence that a later sentence
+    overwrites shows up only here."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gps_stream_processing_spark.plans.nmea_oracle import fixes_cte, raw_cte
+    from gps_stream_processing_spark.sources.nmea import fixture_parquet_path
+
+    names = ("line_no", "track_id", "value")
+    fx = pq.read_table(fixture_parquet_path())
+    rows = list(zip(*(fx.column(c).to_pylist() for c in names)))
+    extra = _fuzz_lines() + NON_FINITE_LINES
+    rows += [(len(rows) + i, i % 7, ln) for i, ln in enumerate(extra)]
+    own_raw = "\nraw AS (\n  SELECT line_no, track_id, value FROM lines_in\n)"
+    sql = fixes_cte().replace(raw_cte(), own_raw) + "\nSELECT * FROM parsed ORDER BY line_no"
+    con = duckdb.connect()
+    con.register("lines_in", pa.table(dict(zip(names, map(list, zip(*rows))))))
+    cur = con.execute(sql)
+    cols = [d[0] for d in cur.description]
+    want = cur.fetchall()
+
+    size_of = {"n_prns": "sat_prns", "n_sat_groups": "sat_info_part"}
+    sel = [F.when(F.col(size_of[c]).isNotNull(), F.size(size_of[c])).alias(c)
+           if c in size_of else c for c in cols]
+    parsed = parse_sentences(spark.createDataFrame(rows, NMEA_LINE_SCHEMA))
+    got = [tuple(r) for r in parsed.select(*sel).orderBy("line_no").collect()]
+    assert len(got) == len(want)
+    bad = [(g, w) for g, w in zip(got, want) if g != w]
+    assert not bad, f"{len(bad)} rows differ; columns {cols}; first: {bad[:3]}"
+    non_finite = set(range(len(rows) - len(NON_FINITE_LINES), len(rows)))
+    assert non_finite <= {w[0] for w in want}
+
+
+def test_oracle_imports_nothing_from_the_parse():
+    """The oracle spells out token positions itself; importing them from
+    ``operators.gps_fix`` would let one wrong position into both the
+    program and its check."""
+    import ast
+
+    import gps_stream_processing_spark.plans.nmea_oracle as oracle
+
+    tree = ast.parse(open(oracle.__file__).read())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            imported.add(node.module or "")
+            imported |= {f"{node.module}.{a.name}" for a in node.names}
+    assert not [m for m in imported if "gps_fix" in m], sorted(imported)
 
 
 def test_committed_fixture_parquet_matches_generator():

@@ -268,6 +268,28 @@ def test_scan_stage_parallelism_pins(spark):
         )
 
 
+def test_fix_batch_flagship_single_shuffle(spark, tmp_path):
+    """The fix_batch pass has ONE shuffle: ``read_nmea_text`` numbers
+    lines in hash(track_id) partitions, which the forward fill, the
+    merge and the flagship aggregate all reuse."""
+    import re
+
+    from gps_stream_processing_spark.operators.gps_fix import (
+        flagship_from_fixes,
+        gps_fix_pipeline,
+    )
+    from gps_stream_processing_spark.sources.nmea import (
+        read_nmea_text,
+        write_nmea_fixture,
+    )
+
+    write_nmea_fixture(spark, str(tmp_path), n_tracks=2, n_seconds=30)
+    lines = read_nmea_text(spark, str(tmp_path))
+    plan = _plan_of(flagship_from_fixes(gps_fix_pipeline(lines)))
+    exchanges = re.findall(r"^\(\d+\) Exchange.*\n(?:.*\n)*?Arguments: (.*)", plan, re.M)
+    assert len(exchanges) == 1, f"expected 1 shuffle exchange, got {exchanges}"
+
+
 def test_bootstrap_ci_single_expansion(spark):
     """r17 optimization pin: q_bootstrap_ci derives the 32x replica
     expansion ONCE — one Generate (explode) and at most two parquet
