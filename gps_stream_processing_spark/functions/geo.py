@@ -21,8 +21,14 @@ def degree2decimal(ddmm: Column, hemisphere: Column, prec: int = 6) -> Column:
     S/W; formatted to 6 decimals (``:349``). We keep DoubleType and
     ``round(_, 6)`` (SURVEY §4.2 parity note). Golden:
     ``4807.038, N → 48.12722`` (``:333``).
+
+    The floor stays in double, as DuckDB's ``floor(double)`` does:
+    Spark's ``floor`` returns a bigint, which saturates at ``2**63``, so
+    it runs only where ``|q| < 2**52``. Every larger double is already an
+    integer and is its own floor.
     """
-    deg = F.floor(ddmm / 100).cast("double")
+    q = ddmm / 100
+    deg = F.when(F.abs(q) < F.lit(float(2**52)), F.floor(q).cast("double")).otherwise(q)
     dec = deg + (ddmm - deg * 100) / F.lit(60.0)
     signed = F.when(F.upper(hemisphere).isin("S", "W"), -dec).otherwise(dec)
     return F.round(signed, prec)

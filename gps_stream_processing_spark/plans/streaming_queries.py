@@ -125,10 +125,12 @@ def q_stream_session(spark: SparkSession, sf: str) -> DataFrame:
     doc="The reference's core stateful op in streaming form (SURVEY "
     "§2.5/§2.8): NMEA sentences as an offset-bearing JSON stream → "
     "parse_sentences → applyInPandasWithState keyed per track "
-    "($CurrentUTC forward-fill + last-wins merge inside the state fn). "
-    "Full oracle: availableNow replay over the committed fixture "
-    "reproduces the batch merge (plans/nmea_oracle.py), with is_final "
-    "mirroring the 64-open-fix eviction bound.",
+    "($CurrentUTC forward-fill + last-wins merge inside the state fn, "
+    "streaming/stateful.merge_batch). Each micro-batch emits only the "
+    "fix-seconds it touched, plus, once each, those it evicted past the "
+    "64-open-fix bound as is_final. Full oracle: availableNow replay over "
+    "the committed fixture reproduces the batch merge "
+    "(plans/nmea_oracle.py), with is_final mirroring the eviction bound.",
 )
 def q_stream_fix_merge(spark: SparkSession, sf: str) -> DataFrame:
 

@@ -306,7 +306,3 @@ def read_nmea_text(spark: SparkSession, path: str) -> DataFrame:
     w = W.partitionBy("track_id").orderBy(F.monotonically_increasing_id())
     return raw.select(F.row_number().over(w).cast("long").alias("line_no"), "track_id", "value")
 
-
-def read_nmea_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming text source (SURVEY §2.8)."""
-    return spark.readStream.text(path)

@@ -84,23 +84,6 @@ def _stream_arrow_batch(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
-# Optional measurement hook (guide §1: measure first): when set to a
-# callable, every runner hands it the finished query's recentProgress
-# list (StreamingQueryProgress objects) before sink cleanup. Used by
-# the optimization rounds' instrumentation scripts to attribute wall
-# clock to queryPlanning/addBatch/commit phases; None (no-op) in
-# production and in every query path.
-PROGRESS_HOOK = None
-
-
-def _emit_progress(q) -> None:
-    if PROGRESS_HOOK is not None:
-        try:
-            PROGRESS_HOOK(list(q.recentProgress))
-        except Exception:  # noqa: BLE001 — measurement must never break a run
-            pass
-
-
 @contextlib.contextmanager
 def rocksdb_state_store(spark: SparkSession):
     """Scoped state-store config for the TWS keys: the RocksDB provider
@@ -272,7 +255,6 @@ def run_available_now(
                 .start()
             )
             q.awaitTermination()
-        _emit_progress(q)
         return spark.table(name).localCheckpoint(eager=True)
     finally:
         # Hygiene runs on FAILURE too: a stream that dies after start()
@@ -313,7 +295,6 @@ def run_foreach_batch_parquet(
                 .start()
             )
             q.awaitTermination()
-        _emit_progress(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(out_dir)
@@ -375,7 +356,6 @@ def run_data_drained(
             time.sleep(0.2)
         q.stop()
         q.awaitTermination()
-        _emit_progress(q)
         return spark.table(name).localCheckpoint(eager=True)
     finally:
         arrow_ctx.__exit__(None, None, None)
@@ -420,7 +400,6 @@ def run_process_all(
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
-        _emit_progress(q)
         return spark.table(name).localCheckpoint(eager=True)
     finally:
         arrow_ctx.__exit__(None, None, None)

@@ -6,24 +6,27 @@ expressed as ``applyInPandasWithState`` keyed on ``track_id``.
 
 This is one of the engine's two sanctioned pandas escape hatches
 (SURVEY §3.4): the merge is inherently order-dependent per receiver, so
-it cannot be a plain streaming aggregation. State per track is tiny
-(the single open fix + the running date), so at 1000 receivers × 100 TB
-the state store stays O(#tracks), exactly like the reference's
-O(#distinct-seconds) map but bounded by emission.
+it cannot be a plain streaming aggregation. State per track is the
+forward-filled UTC/date cursor plus up to ``MAX_OPEN_FIXES`` open
+fix-seconds (the reference's ``$Nmea`` map, bounded), one JSON list per
+fix-second in ``OUTPUT_SCHEMA`` order: about 7 KB of JSON per receiver
+when full, so the store grows with the number of receivers, not of
+lines.
 
 Ordering contract: rows carry ``line_no`` (the per-receiver arrival
 order — in production the Kafka partition offset); the merge sorts each
-micro-batch by it. Emission: a fix closes when a later UTC key appears
-on its track; open fixes are also emitted (``is_final = false``) so an
-availableNow replay over a finite fixture reproduces the batch pipeline
-exactly (verified in tests/test_streaming.py).
+micro-batch by it. Emission (update mode, the latest version of a
+``(track_id, utc)`` wins downstream): each batch emits the fix-seconds it
+touched (``is_final = false``) and, once each, the fix-seconds it evicted
+(``is_final = true``). An availableNow replay over a finite fixture
+therefore reproduces the batch pipeline exactly (verified in
+tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,10 +53,12 @@ OUTPUT_SCHEMA = (
     "speed_kmh double, track_deg_true double, sentence_types string, "
     "is_final boolean"
 )
+_OUTPUT_COLUMNS = [c.split()[0] for c in OUTPUT_SCHEMA.split(",")]
 
-# state: the per-track open-record map {utc: fields} (the reference's
-# $Nmea store, class.nmea.parser.php:18, bounded by eviction) + the
-# forward-filled current utc/date cursor.
+# state: the per-track open-record map {utc: [*MERGE_FIELDS,
+# sentence_types]} in arrival order (the reference's $Nmea store,
+# class.nmea.parser.php:18, bounded by eviction) + the forward-filled
+# current utc/date cursor.
 STATE_SCHEMA = "cur_utc string, cur_date string, blob string"
 
 # Max open fix-seconds kept per track before the oldest are finalized —
@@ -61,86 +66,71 @@ STATE_SCHEMA = "cur_utc string, cur_date string, blob string"
 # (SURVEY §4.1 'spill/memory mgmt: none'), ours is not.
 MAX_OPEN_FIXES = 64
 
-
-def _row_to_fix(track_id: int, utc: str, fields: dict[str, Any], final: bool) -> dict:
-    out = {
-        "track_id": track_id,
-        "utc": utc,
-        "sentence_types": ",".join(sorted(fields.get("__types", []))),
-        "is_final": final,
-    }
-    for f in MERGE_FIELDS:
-        out[f] = fields.get(f)
-    return out
+_TYPES = len(MERGE_FIELDS)  # a record's sentence_types slot; date is slot 0
 
 
-def merge_lines(
-    track_id: int,
-    batch: pd.DataFrame,
-    cur_utc: str | None,
-    cur_date: str | None,
-    records: dict[str, dict[str, Any]],
-) -> tuple[list[dict], str | None, str | None]:
-    """The merge core shared by BOTH stateful APIs
-    (``applyInPandasWithState`` and ``transformWithStateInPandas``):
-    last-non-null-wins by line order into a per-UTC record map (the
-    reference's overwrite upsert into ``$Nmea[utc]``,
-    class.nmea.parser.php:173-187 — revisiting a key merges into the
-    existing record, it does not open a second one). Mutates
-    ``records``; returns (evicted_final_fixes, cur_utc, cur_date)."""
-    evicted: list[dict] = []
-    for row in batch.itertuples(index=False):
-        utc = getattr(row, "utc", None)
-        if utc is not None and not pd.isna(utc):
-            cur_utc = utc
-            if cur_utc not in records:
-                records[cur_utc] = {"__types": [], "date": cur_date}
-                if len(records) > MAX_OPEN_FIXES:  # finalize oldest (arrival order)
-                    old_key = next(iter(records))
-                    if old_key != cur_utc:
-                        evicted.append(
-                            _row_to_fix(track_id, old_key, records.pop(old_key), True)
-                        )
-        if cur_utc is None:
-            continue  # pre-key sentence: no home record (batch twin drops too)
-        fields = records[cur_utc]
-        for f in MERGE_FIELDS:
-            v = getattr(row, f, None)
-            if v is not None and not pd.isna(v):
-                fields[f] = v
-                if f == "date":
-                    cur_date = v
-        st = getattr(row, "stype", None)
-        if st is not None and not pd.isna(st) and st not in fields["__types"]:
-            fields["__types"].append(st)
-
-    return evicted, cur_utc, cur_date
+def _load_records(blob: str) -> dict[str, list]:
+    records = json.loads(blob)
+    if not all(isinstance(r, list) and len(r) == _TYPES + 1 for r in records.values()):
+        raise ValueError(
+            "fix-merge state blob is not in the list-record format (it was written "
+            "by an older version that stored dict records); this checkpoint cannot "
+            "be restored — restart the query on a new checkpoint"
+        )
+    return records
 
 
 def merge_batch(
     track_id: int,
     pdfs: Iterator[pd.DataFrame],
     state: tuple[str | None, str | None, str] | None,
-) -> tuple[list[dict], tuple[str | None, str | None, str]]:
-    """One micro-batch of one track, for BOTH stateful APIs: load the
-    stored ``STATE_SCHEMA`` tuple (``None`` for a new track), run
-    :func:`merge_lines` over the batch in ``line_no`` order, and return
-    (output rows, the state tuple to store)."""
+) -> tuple[list[tuple], tuple[str | None, str | None, str]]:
+    """The one fold for BOTH stateful APIs (``applyInPandasWithState``
+    and ``transformWithStateInPandas``): one micro-batch of one track,
+    from the stored ``STATE_SCHEMA`` tuple (``None`` for a new track).
+
+    Rows fold in ``line_no`` order. Each keyed row merges into its
+    fix-second's record, last non-null wins per field (the reference's
+    overwrite upsert into ``$Nmea[utc]``, class.nmea.parser.php:173-187;
+    a revisit merges into the open record). The record's date is the
+    forward-filled date after its latest row, the batch twin's
+    ``last(date_key)``. After the fold, records beyond ``MAX_OPEN_FIXES``
+    are evicted, oldest first by arrival. Returns (output rows in
+    ``OUTPUT_SCHEMA`` order, the state tuple to store): the touched
+    fix-seconds still open with ``is_final = false``, and the evicted
+    ones with ``is_final = true``."""
     if state is not None:
         cur_utc, cur_date, blob = state
-        records: dict[str, dict[str, Any]] = json.loads(blob)
+        records = _load_records(blob)
     else:
         cur_utc, cur_date, records = None, None, {}
 
     batch = pd.concat(list(pdfs), ignore_index=True).sort_values("line_no", kind="stable")
-    evicted, cur_utc, cur_date = merge_lines(track_id, batch, cur_utc, cur_date, records)
+    touched: dict[str, None] = {}
+    rows = batch[["utc", "stype", *MERGE_FIELDS]].itertuples(index=False, name=None)
+    for utc, stype, *vals in rows:
+        if vals[0] is not None and vals[0] == vals[0]:
+            cur_date = vals[0]
+        if utc is not None and utc == utc:
+            cur_utc = utc
+        if cur_utc is None:
+            continue  # pre-key sentence: no home record (batch twin drops too)
+        rec = records.get(cur_utc)
+        if rec is None:
+            rec = records[cur_utc] = [None] * _TYPES + [stype]
+        for i in range(1, _TYPES):
+            v = vals[i]
+            if v is not None and v == v:
+                rec[i] = v
+        rec[0] = cur_date
+        types = rec[_TYPES].split(",")
+        if stype not in types:
+            rec[_TYPES] = ",".join(sorted([*types, stype]))
+        touched[cur_utc] = None
 
-    # snapshot every open record (update mode: latest version wins
-    # downstream); an availableNow replay over a finite fixture therefore
-    # reproduces the batch pipeline exactly.
-    out = evicted + [
-        _row_to_fix(track_id, utc, fields, False) for utc, fields in records.items()
-    ]
+    n_evict = max(0, len(records) - MAX_OPEN_FIXES)
+    out = [(track_id, utc, *records.pop(utc), True) for utc in list(records)[:n_evict]]
+    out += [(track_id, utc, *records[utc], False) for utc in touched if utc in records]
     return out, (cur_utc, cur_date, json.dumps(records))
 
 
@@ -152,7 +142,7 @@ def merge_fix_groups(
     out, new_state = merge_batch(track_id, pdfs, state.get if state.exists else None)
     state.update(new_state)
     if out:
-        yield pd.DataFrame(out)
+        yield pd.DataFrame(out, columns=_OUTPUT_COLUMNS)
 
 
 def streaming_fix_merge(parsed: DataFrame) -> DataFrame:
@@ -186,7 +176,7 @@ def make_fix_merge_processor():
             out, new_state = merge_batch(track_id, rows, prev)
             self._state.update(new_state)
             if out:
-                yield pd.DataFrame(out)
+                yield pd.DataFrame(out, columns=_OUTPUT_COLUMNS)
 
         def close(self) -> None:
             pass

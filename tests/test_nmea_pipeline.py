@@ -303,14 +303,22 @@ NON_FINITE_LINES = [
     "$GPVTG,NaN,T,1e309,M,-1e309,N,NaN,K*48",
 ]
 
+# Finite coordinates past the bigint range: degree2decimal must floor in
+# double, as DuckDB's floor(double) does, not saturate at 2**63.
+HUGE_COORD_LINES = [
+    "$GPGGA,123519,1e300,N,-1e300,E,1,08,0.9,545.4,M,46.9,M,,*58",
+    "$GPRMC,123519,A,-1e300,S,1e300,W,022.4,084.4,230394,003.1,W*7A",
+    "$GPGLL,1e300,S,-1e300,E,225444,A,*07",
+]
+
 
 def test_parse_matches_oracle_per_sentence(spark):
     """``parse_sentences`` == the DuckDB twin's per-sentence ``parsed``
     relation, row by row on ``line_no``, over every column it has
-    (arrays as sizes). Input: the committed fixture, the fuzz corpus and
-    non-finite tokens. The merged-fix oracles only see the value that
-    wins the merge, so a per-sentence divergence that a later sentence
-    overwrites shows up only here."""
+    (arrays as sizes). Input: the committed fixture, the fuzz corpus,
+    non-finite tokens and ±1e300 coordinates. The merged-fix oracles
+    only see the value that wins the merge, so a per-sentence divergence
+    that a later sentence overwrites shows up only here."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -321,7 +329,7 @@ def test_parse_matches_oracle_per_sentence(spark):
     names = ("line_no", "track_id", "value")
     fx = pq.read_table(fixture_parquet_path())
     rows = list(zip(*(fx.column(c).to_pylist() for c in names)))
-    extra = _fuzz_lines() + NON_FINITE_LINES
+    extra = _fuzz_lines() + NON_FINITE_LINES + HUGE_COORD_LINES
     rows += [(len(rows) + i, i % 7, ln) for i, ln in enumerate(extra)]
     own_raw = "\nraw AS (\n  SELECT line_no, track_id, value FROM lines_in\n)"
     sql = fixes_cte().replace(raw_cte(), own_raw) + "\nSELECT * FROM parsed ORDER BY line_no"
@@ -339,8 +347,8 @@ def test_parse_matches_oracle_per_sentence(spark):
     assert len(got) == len(want)
     bad = [(g, w) for g, w in zip(got, want) if g != w]
     assert not bad, f"{len(bad)} rows differ; columns {cols}; first: {bad[:3]}"
-    non_finite = set(range(len(rows) - len(NON_FINITE_LINES), len(rows)))
-    assert non_finite <= {w[0] for w in want}
+    tail = set(range(len(rows) - len(NON_FINITE_LINES + HUGE_COORD_LINES), len(rows)))
+    assert tail <= {w[0] for w in want}
 
 
 def test_oracle_imports_nothing_from_the_parse():
