@@ -23,6 +23,7 @@ from gps_stream_processing_spark.operators.gps_fix import (
 )
 from gps_stream_processing_spark.plans import nmea_oracle as _orc
 from gps_stream_processing_spark.plans.registry import register, table
+from gps_stream_processing_spark.session import scoped_conf
 from gps_stream_processing_spark.sources.nmea import nmea_fixture_df
 
 # One deterministic fixture shape for every NMEA query (seed pinned in
@@ -472,10 +473,9 @@ def q_udtf_analyze(spark: SparkSession, sf: str) -> DataFrame:
     # q_udtf_gsv, which fans out rows and measures faster under
     # Arrow). Pin the pickle path for this key; the session default
     # (tune_session) stays arrow.enabled=true.
-    arrow_key = "spark.sql.execution.pythonUDTF.arrow.enabled"
-    prev = spark.conf.get(arrow_key, None)
-    spark.conf.set(arrow_key, "false")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.execution.pythonUDTF.arrow.enabled": "false"}
+    ):
         spark.udtf.register("normalize_row", udtf(NormalizeRow))
         li = table(spark, sf, "lineitem").filter(
             F.col("l_orderkey") % 50 == 0
@@ -494,11 +494,6 @@ def q_udtf_analyze(spark: SparkSession, sf: str) -> DataFrame:
         )
         spark.catalog.dropTempView("_udtf_an_lineitem")
         return out
-    finally:
-        if prev is None:
-            spark.conf.unset(arrow_key)
-        else:
-            spark.conf.set(arrow_key, prev)
 
 
 @register(

@@ -30,6 +30,7 @@ from gps_stream_processing_spark.plans.registry import (
     spread_scan,
     table,
 )
+from gps_stream_processing_spark.session import scoped_conf
 from gps_stream_processing_spark.workdir import land_dir
 
 # ---------------------------------------------------------------- §2.1 scans
@@ -1845,10 +1846,7 @@ def skew_join_aqe_materialized(spark: SparkSession, sf: str):
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1B",
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         rows = agg.collect()  # 7 buckets — O(1) driver result
         # executedPlan introspection needs the classic py4j backend;
         # under Spark Connect the snapshot values are identical (AQE
@@ -1859,12 +1857,6 @@ def skew_join_aqe_materialized(spark: SparkSession, sf: str):
             if is_classic_session(spark)
             else None
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(rows, schema=agg.schema), plan
 
 
@@ -7343,7 +7335,6 @@ def bloom_native_join_materialized(spark, sf, force_enabled=True):
         # ON regardless of session default; the plan-pin test's control
         # passes force_enabled=False with the rule disabled session-wide.
         confs["spark.sql.optimizer.runtime.bloomFilter.enabled"] = "true"
-    prev = {k: spark.conf.get(k, None) for k in confs}
     dim = (
         table(spark, sf, "part")
         .filter(F.col("p_brand") == "Brand#23")
@@ -7360,21 +7351,13 @@ def bloom_native_join_materialized(spark, sf, force_enabled=True):
             F.sum("l_quantity").cast("double").alias("sum_qty"),
         )
     )
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         rows = agg.collect()  # 3 return flags — O(1) driver result
         plan = (
             agg._jdf.queryExecution().optimizedPlan().toString()
             if is_classic_session(spark)
             else None
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(rows, schema=agg.schema), plan
 
 

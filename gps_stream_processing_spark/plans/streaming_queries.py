@@ -16,11 +16,13 @@ from pyspark.sql import functions as F
 
 from gps_stream_processing_spark.plans.nmea_oracle import ORACLE_STREAM_FIX_MERGE
 from gps_stream_processing_spark.plans.registry import register, table
+from gps_stream_processing_spark.session import scoped_conf
 from gps_stream_processing_spark.streaming.runner import (
-    tws_state_partitions,
     events_stream,
     rocksdb_state_store,
     run_available_now,
+    tws_state_partitions,
+    unload_idle_state_stores,
 )
 from gps_stream_processing_spark.workdir import land_dir
 
@@ -488,12 +490,10 @@ def q_stream_tws_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_stream_tws_forecast(spark: SparkSession, sf: str) -> DataFrame:
     import os
+    import shutil
     import uuid
 
-    from gps_stream_processing_spark.streaming.runner import (
-        events_stream,
-        make_latest_upsert,
-    )
+    from gps_stream_processing_spark.streaming.runner import make_latest_upsert
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_holt_tws,
     )
@@ -505,12 +505,10 @@ def q_stream_tws_forecast(spark: SparkSession, sf: str) -> DataFrame:
     # dashboard's current forecast set
     upsert = make_latest_upsert(spark, serving, "user_id")
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(tws_state_partitions())
-    )
     try:
-        with rocksdb_state_store(spark):
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": str(tws_state_partitions())}
+        ), rocksdb_state_store(spark):
             out = streaming_holt_tws(events_stream(spark, sf))
             q = (
                 out.writeStream.outputMode("update")
@@ -520,42 +518,40 @@ def q_stream_tws_forecast(spark: SparkSession, sf: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        # serving stores RAW state doubles; presentation rounding and
-        # the h-step forecasts derive at READ time with the batch
-        # q_holt_linear expression tree. The result is snapshotted
-        # (eager localCheckpoint) and the per-call uuid dir removed —
-        # a bench/driver session calls this key repeatedly and must
-        # not accumulate O(#users) serving tables on disk (the
-        # run_available_now memory-sink hygiene discipline).
-        z = F.lit(0.0)
-        res = (
-            spark.read.parquet(serving)
-            .select(
-                "user_id",
-                "n_events",
-                (F.round("level", 6) + z).alias("level"),
-                (F.round("trend", 6) + z).alias("trend"),
-                (
-                    F.round(
-                        F.col("level") + F.lit(1.0) * F.col("trend"), 6
-                    )
-                    + z
-                ).alias("forecast_1"),
-                (
-                    F.round(
-                        F.col("level") + F.lit(7.0) * F.col("trend"), 6
-                    )
-                    + z
-                ).alias("forecast_7"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-        return res
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        unload_idle_state_stores(spark)
+    # serving stores RAW state doubles; presentation rounding and
+    # the h-step forecasts derive at READ time with the batch
+    # q_holt_linear expression tree. The result is snapshotted
+    # (eager localCheckpoint) and the per-call uuid dir removed —
+    # a bench/driver session calls this key repeatedly and must
+    # not accumulate O(#users) serving tables on disk (the
+    # run_available_now memory-sink hygiene discipline).
+    z = F.lit(0.0)
+    res = (
+        spark.read.parquet(serving)
+        .select(
+            "user_id",
+            "n_events",
+            (F.round("level", 6) + z).alias("level"),
+            (F.round("trend", 6) + z).alias("trend"),
+            (
+                F.round(
+                    F.col("level") + F.lit(1.0) * F.col("trend"), 6
+                )
+                + z
+            ).alias("forecast_1"),
+            (
+                F.round(
+                    F.col("level") + F.lit(7.0) * F.col("trend"), 6
+                )
+                + z
+            ).alias("forecast_7"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    shutil.rmtree(base, ignore_errors=True)
+    return res
 
 
 def q_stream_tws_anomaly(spark: SparkSession, sf: str) -> DataFrame:
@@ -1319,9 +1315,7 @@ def q_stream_upsert_sink(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import uuid
 
-    from gps_stream_processing_spark.streaming.runner import (
-        make_latest_upsert,
-    )
+    from gps_stream_processing_spark.streaming.runner import make_latest_upsert
 
     base = os.path.join(land_dir("upsert", sf), uuid.uuid4().hex)
     serving = os.path.join(base, "serving")
@@ -1336,14 +1330,17 @@ def q_stream_upsert_sink(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            agg.writeStream.outputMode("update")
+            .foreachBatch(upsert)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        unload_idle_state_stores(spark)
     # snapshot + remove the per-call uuid dir (the q_stream_tws_forecast
     # hygiene — repeated bench/driver calls must not accumulate tables)
     res = spark.read.parquet(serving).localCheckpoint(eager=True)
@@ -1473,24 +1470,18 @@ def q_state_reader(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            q = (
+                agg.writeStream.format("noop")
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        from gps_stream_processing_spark.streaming.runner import (
-            _unload_idle_state_stores,
-        )
-
-        _unload_idle_state_stores(spark)
+        unload_idle_state_stores(spark)
     st = spark.read.format("statestore").option("path", ckpt).load()
     return st.select(
         F.col("key.event_type").alias("event_type"),
@@ -1659,17 +1650,16 @@ def q_stream_progress(spark: SparkSession, sf: str) -> DataFrame:
     name = f"mem_prog_{_uuid.uuid4().hex[:10]}"
     collector = _Collector(name)
     spark.streams.addListener(collector)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         # listener events are delivered on a separate dispatcher
         # thread — poll (bounded) for the terminated event, which is
         # ordered AFTER every progress event of this query
@@ -1678,17 +1668,12 @@ def q_stream_progress(spark: SparkSession, sf: str) -> DataFrame:
             time.sleep(0.05)
         sink_rows = spark.table(name).count()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.streams.removeListener(collector)
         try:
             spark.catalog.dropTempView(name)
         except Exception:  # noqa: BLE001 — view absent if start() failed
             pass
-        from gps_stream_processing_spark.streaming.runner import (
-            _unload_idle_state_stores,
-        )
-
-        _unload_idle_state_stores(spark)
+        unload_idle_state_stores(spark)
     total_in = sum(p.numInputRows for p in collector.progresses)
     state_total = 0
     for p in collector.progresses:  # last non-empty stateOperators wins
@@ -2111,24 +2096,18 @@ def q_state_time_travel(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            q = (
+                agg.writeStream.format("noop")
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        from gps_stream_processing_spark.streaming.runner import (
-            _unload_idle_state_stores,
-        )
-
-        _unload_idle_state_stores(spark)
+        unload_idle_state_stores(spark)
     at0 = (
         spark.read.format("statestore")
         .option("path", ckpt)

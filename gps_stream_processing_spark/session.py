@@ -10,7 +10,9 @@ scale-relevant lives in plain configs here.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -54,6 +56,26 @@ SESSION_CONF: dict[str, str] = {
     # nmea_synth track-pruning scan (q_custom_source_pushdown).
     "spark.sql.python.filterPushdown.enabled": "true",
 }
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the body of a ``with``. On every
+    exit, failure included, each key gets its previous value back, or is
+    unset if it had none. The one place a temporary override is undone:
+    a plan whose optimizer reads a conf must run its action inside the
+    scope, since the conf is gone once the block exits."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def default_parallelism() -> int:

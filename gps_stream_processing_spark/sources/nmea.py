@@ -165,9 +165,9 @@ def generate_nmea_rows(
 
 # line_no namespace stride for per-track generation: track t owns
 # [t*stride, (t+1)*stride). Max burst is 9 lines/fix-second
-# (GGA+RMC+GLL+GSA+2×GSV+VTG+ZDA+malformed), so generate_track_rows
-# guards n_seconds*9 <= stride — a spill would silently collide two
-# tracks' line_no keys downstream.
+# (GGA+RMC+GLL+GSA+2×GSV+VTG+ZDA+malformed), so
+# generate_track_rows_by_second guards n_seconds*9 <= stride — a spill
+# would silently collide two tracks' line_no keys downstream.
 TRACK_LINE_STRIDE = 1_000_000
 _MAX_BURST_LINES = 9
 
@@ -188,13 +188,6 @@ def generate_track_rows(
     sequential ``generate_nmea_rows`` stays the byte-pinned fixture
     contract. Same per-second burst, same sentence mix, same defect
     rates — only the seeding and numbering differ."""
-    if n_seconds * _MAX_BURST_LINES > TRACK_LINE_STRIDE:
-        raise ValueError(
-            f"n_seconds={n_seconds} can emit up to "
-            f"{n_seconds * _MAX_BURST_LINES} lines — past the "
-            f"{TRACK_LINE_STRIDE}-wide per-track line_no namespace; "
-            "raise TRACK_LINE_STRIDE or split the track"
-        )
     return [r for _, burst in generate_track_rows_by_second(
         track, n_seconds=n_seconds, seed=seed, start=start
     ) for r in burst]
@@ -215,10 +208,11 @@ def generate_track_rows_by_second(
     regenerates from second 0 and slices (the fixture is tiny; a real
     source would seek a broker offset instead)."""
     if n_seconds * _MAX_BURST_LINES > TRACK_LINE_STRIDE:
-        raise ValueError(  # same collision guard as generate_track_rows
+        raise ValueError(
             f"n_seconds={n_seconds} can emit up to "
             f"{n_seconds * _MAX_BURST_LINES} lines — past the "
-            f"{TRACK_LINE_STRIDE}-wide per-track line_no namespace"
+            f"{TRACK_LINE_STRIDE}-wide per-track line_no namespace; "
+            "raise TRACK_LINE_STRIDE or split the track"
         )
     rng = random.Random(f"{seed}/track/{track}")
     start = start or datetime(2024, 3, 23, 12, 35, 19, tzinfo=timezone.utc)

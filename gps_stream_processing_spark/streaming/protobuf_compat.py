@@ -36,8 +36,10 @@ Two wiring points, both required:
   this import (the driver harness owns session creation). It must run
   before the FIRST Python function is wrapped in the session, or the
   changed env key spawns a second worker-daemon pool and every warmed
-  worker is lost — hence the call lives in ``registry.tune_session``
-  (first thing every registered query does), not in the TWS query.
+  worker is lost. Hence the call lives in exactly two places, both
+  ahead of any wrap: ``session.get_spark`` (every session the engine
+  builds) and ``registry.tune_session`` (first thing every registered
+  query does, for a session the caller built) — never in a TWS builder.
 
 Capability is probed end-to-end (`tws_available`): import the actual
 pyspark gencode and round-trip a message, so a too-old discovered

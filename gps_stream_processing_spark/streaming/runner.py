@@ -11,13 +11,15 @@ verified here are the plans that would run live.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
+from gps_stream_processing_spark.session import default_parallelism, scoped_conf
 from gps_stream_processing_spark.workdir import land_dir
 
 # State-partition width for the transformWithStateInPandas keys. The
@@ -35,7 +37,10 @@ from gps_stream_processing_spark.workdir import land_dir
 # JVM-stateful floor of 4); production sizes this to keyspace x
 # throughput via the env knob (the count is pinned per checkpoint at
 # first start, so it is a deliberate per-stream decision either way).
-def _default_tws_partitions() -> int:
+def tws_state_partitions() -> int:
+    """Resolved LAZILY at each use site (ADVICE r16): a module-level
+    constant would crash every import of this package on a malformed
+    env value and freeze the knob at first-import time."""
     explicit = os.environ.get("SPARK_GRAFT_TWS_STATE_PARTITIONS")
     if explicit:
         try:
@@ -48,16 +53,8 @@ def _default_tws_partitions() -> int:
                 "int; falling back to the computed default",
                 stacklevel=2,
             )
-    from gps_stream_processing_spark.session import default_parallelism
-
     return min(8, max(4, default_parallelism()))
 
-
-def tws_state_partitions() -> int:
-    """Resolved LAZILY at each use site (ADVICE r16): a module-level
-    constant would crash every import of this package on a malformed
-    env value and freeze the knob at first-import time."""
-    return _default_tws_partitions()
 
 # Arrow batch width for the streaming Python boundary (guide §4.2
 # posture: keep batches large enough for vectorization to pay off).
@@ -70,58 +67,42 @@ def tws_state_partitions() -> int:
 _STREAM_ARROW_BATCH = "131072"
 
 
-@contextlib.contextmanager
-def _stream_arrow_batch(spark: SparkSession):
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _STREAM_ARROW_BATCH)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-@contextlib.contextmanager
-def rocksdb_state_store(spark: SparkSession):
-    """Scoped state-store config for the TWS keys: the RocksDB provider
-    (required by transformWithStateInPandas) plus CHANGELOG
-    CHECKPOINTING — each commit uploads the batch's delta instead of a
-    full .zip snapshot of every store instance (snapshots still happen,
-    in background maintenance). Measured ~-14% on the timer_list key at
-    sf0.1; at production state volumes changelog commits are the
-    documented posture for latency-sensitive RocksDB streams. Restores
-    both confs on exit (the previous per-key boilerplate restored only
-    the provider)."""
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
+def _stream_confs(state_partitions: int) -> dict[str, str]:
+    """The confs a stream runs under, for its whole lifetime: every
+    micro-batch plans with them, so they stay set until it stops."""
+    return {
+        "spark.sql.shuffle.partitions": str(state_partitions),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": _STREAM_ARROW_BATCH,
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, p in prev.items():
-            if p is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, p)
+
+
+# Scoped state-store config for the TWS keys: the RocksDB provider
+# (required by transformWithStateInPandas) plus CHANGELOG
+# CHECKPOINTING — each commit uploads the batch's delta instead of a
+# full .zip snapshot of every store instance (snapshots still happen,
+# in background maintenance). Measured ~-14% on the timer_list key at
+# sf0.1; at production state volumes changelog commits are the
+# documented posture for latency-sensitive RocksDB streams.
+_ROCKSDB_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "true",
+}
+
+
+def rocksdb_state_store(spark: SparkSession):
+    """:data:`_ROCKSDB_CONF` for the body of a ``with``; both confs are
+    restored on exit (:func:`session.scoped_conf`)."""
+    return scoped_conf(spark, _ROCKSDB_CONF)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file stream (FIXTURES.md: events doubles as
     the streaming fixture). Schema passed explicitly — a streaming
     source must never infer."""
-    import os
-
     from pyspark.sql import functions as F
 
     # ts has shipped as TIMESTAMP(NANOS) or TIMESTAMP(MICROS, NTZ)
@@ -180,7 +161,7 @@ def _stream_dir(parquet_file: str) -> str:
     return d
 
 
-def _unload_idle_state_stores(spark: SparkSession) -> None:
+def unload_idle_state_stores(spark: SparkSession) -> None:
     """Release state-store resources a finished availableNow run leaves
     behind in a long-lived local session: the executor-side StateStore
     coordinator keeps every loaded provider (RocksDB native handles,
@@ -216,6 +197,50 @@ def _unload_idle_state_stores(spark: SparkSession) -> None:
         pass
 
 
+def _run_to_memory(
+    sdf: DataFrame,
+    output_mode: str,
+    state_partitions: int,
+    trigger: dict,
+    drive: Callable[[StreamingQuery], None],
+) -> DataFrame:
+    """The one memory-sink run behind the public runners: start ``sdf``
+    with ``trigger`` into a uuid-named memory sink under the stream
+    confs, wait with ``drive``, stop, and snapshot the sink with an
+    eager ``localCheckpoint``. Hygiene runs on FAILURE too: a stream
+    that dies after start() has already registered the sink view and
+    loaded state-store providers — exactly the leak this cleanup exists
+    to prevent (and a bench adjudication re-run would leak again on
+    retry)."""
+    spark = sdf.sparkSession
+    name = f"mem_{uuid.uuid4().hex[:10]}"
+    q = None
+    with scoped_conf(spark, _stream_confs(state_partitions)):
+        try:
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(**trigger)
+                .start()
+            )
+            drive(q)
+            q.stop()
+            q.awaitTermination()
+            return spark.table(name).localCheckpoint(eager=True)
+        finally:
+            if q is not None and q.isActive:
+                try:
+                    q.stop()
+                except Exception:  # noqa: BLE001
+                    pass
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:  # noqa: BLE001 — view may not exist if start() failed
+                pass
+            unload_idle_state_stores(spark)
+
+
 def run_available_now(
     sdf: DataFrame, output_mode: str = "complete", state_partitions: int = 4
 ) -> DataFrame:
@@ -241,32 +266,13 @@ def run_available_now(
     (measured 4x on the dedup stream; 4 beats 8 by another ~33% across
     the windowed/dedup/session streams at sf0.01). At production state volumes the
     same knob scales UP with keyspace size."""
-    spark = sdf.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:10]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        with _stream_arrow_batch(spark):
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        # Hygiene runs on FAILURE too: a stream that dies after start()
-        # has already registered the sink view and loaded state-store
-        # providers — exactly the leak this cleanup exists to prevent
-        # (and a bench adjudication re-run would leak again on retry).
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # noqa: BLE001 — view may not exist if start() failed
-            pass
-        _unload_idle_state_stores(spark)
+    return _run_to_memory(
+        sdf,
+        output_mode,
+        state_partitions,
+        {"availableNow": True},
+        lambda q: q.awaitTermination(),
+    )
 
 
 def run_foreach_batch_parquet(
@@ -281,22 +287,17 @@ def run_foreach_batch_parquet(
 
     shutil.rmtree(out_dir, ignore_errors=True)
     spark = sdf.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        with _stream_arrow_batch(spark):
-            q = (
-                sdf.writeStream.foreachBatch(
-                    lambda batch_df, batch_id: batch_df.write.mode("append").parquet(
-                        out_dir
-                    )
+    with scoped_conf(spark, _stream_confs(state_partitions)):
+        q = (
+            sdf.writeStream.foreachBatch(
+                lambda batch_df, batch_id: batch_df.write.mode("append").parquet(
+                    out_dir
                 )
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.read.parquet(out_dir)
 
 
@@ -321,22 +322,7 @@ def run_data_drained(
     hygiene as the other runners."""
     import time
 
-    spark = sdf.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:10]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    q = None
-    arrow_ctx = _stream_arrow_batch(spark)
-    arrow_ctx.__enter__()  # restored in the finally — the stream's
-    # batches keep planning past any single with-block scope
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+    def wait_drained(q: StreamingQuery) -> None:
         deadline = time.time() + timeout_sec
         data_batch = None
         while True:
@@ -347,29 +333,21 @@ def run_data_drained(
                     data_batch = max(data_batch or 0, p["batchId"])
             last = q.lastProgress
             if data_batch is not None and last and last["batchId"] > data_batch:
-                break
+                return
             if time.time() > deadline:
                 raise TimeoutError(
-                    f"streaming query {name} did not drain its data batch "
+                    f"streaming query {q.name} did not drain its data batch "
                     f"within {timeout_sec}s (last progress: {last})"
                 )
             time.sleep(0.2)
-        q.stop()
-        q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        arrow_ctx.__exit__(None, None, None)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if q is not None and q.isActive:
-            try:
-                q.stop()
-            except Exception:  # noqa: BLE001
-                pass
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # noqa: BLE001 — view may not exist if start() failed
-            pass
-        _unload_idle_state_stores(spark)
+
+    return _run_to_memory(
+        sdf,
+        output_mode,
+        state_partitions,
+        {"processingTime": "0 seconds"},
+        wait_drained,
+    )
 
 
 def run_process_all(
@@ -382,38 +360,13 @@ def run_process_all(
     the sink has caught up with a no-longer-advancing latest offset,
     executing every intermediate micro-batch — then stop. Same
     transient-sink + state-store hygiene as the availableNow runner."""
-    spark = sdf.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:10]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    q = None
-    arrow_ctx = _stream_arrow_batch(spark)
-    arrow_ctx.__enter__()  # restored in the finally (multi-batch run)
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        arrow_ctx.__exit__(None, None, None)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if q is not None and q.isActive:
-            try:
-                q.stop()
-            except Exception:  # noqa: BLE001
-                pass
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # noqa: BLE001 — view may not exist if start() failed
-            pass
-        _unload_idle_state_stores(spark)
+    return _run_to_memory(
+        sdf,
+        output_mode,
+        state_partitions,
+        {"processingTime": "0 seconds"},
+        lambda q: q.processAllAvailable(),
+    )
 
 
 def make_latest_upsert(spark: SparkSession, serving: str, key_col: str):

@@ -21,6 +21,11 @@ touched (``is_final = false``) and, once each, the fix-seconds it evicted
 (``is_final = true``). An availableNow replay over a finite fixture
 therefore reproduces the batch pipeline exactly (verified in
 tests/test_streaming.py).
+
+The ``transformWithStateInPandas`` builders (``*_tws``) assume an engine
+session: ``session.get_spark`` and ``registry.tune_session`` wire a
+discovered protobuf runtime into the Python workers before the
+session's first function wraps (``streaming/protobuf_compat.py``).
 """
 
 from __future__ import annotations
@@ -178,9 +183,6 @@ def make_fix_merge_processor():
             if out:
                 yield pd.DataFrame(out, columns=_OUTPUT_COLUMNS)
 
-        def close(self) -> None:
-            pass
-
     return _FixMergeProcessor()
 
 
@@ -188,17 +190,6 @@ def streaming_fix_merge_tws(parsed: DataFrame) -> DataFrame:
     """:func:`streaming_fix_merge` on ``transformWithStateInPandas``.
     Requires the RocksDB state store provider (the API's backing store;
     callers set ``spark.sql.streaming.stateStore.providerClass``)."""
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    # TWS spawns protobuf-speaking Python workers (driver-side state
-    # client + executor-side); when the runtime is a discovered vendor
-    # copy, its path must ride the UDF's envVars — inject before the
-    # function wraps. Idempotent; no-op when protobuf is native.
-    ensure_protobuf()
-    configure_worker_env(parsed.sparkSession)
     cols = ["line_no", "track_id", "stype", "utc", *MERGE_FIELDS]
     slim = parsed.select(*cols)
     return slim.groupBy("track_id").transformWithStateInPandas(
@@ -279,21 +270,11 @@ def make_type_count_processor():
             ]
             yield pd.DataFrame(out)
 
-        def close(self) -> None:
-            pass
-
     return _TypeCountProcessor()
 
 
 def streaming_type_counts_tws(events: DataFrame) -> DataFrame:
     """Per-user per-type event counters on TWS MapState."""
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     return (
         events.select("user_id", "event_type")
         .groupBy("user_id")
@@ -369,9 +350,6 @@ def make_activity_close_processor(gap_ms: int):
                 ]
             )
 
-        def close(self) -> None:
-            pass
-
     return _ActivityCloseProcessor()
 
 
@@ -445,9 +423,6 @@ def make_recent_k_processor(k: int, ttl_ms: int | None):
                 ]
             )
 
-        def close(self) -> None:
-            pass
-
     return _RecentKProcessor()
 
 
@@ -457,13 +432,6 @@ def streaming_recent_k_tws(
     """Last-k-events-per-user on TWS ListState (+ state TTL), keyed by
     ``user_id``. ``timeMode=ProcessingTime`` is what arms the TTL
     clock; no timers are registered."""
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     return (
         events.select("user_id", "event_id", "ts", "value")
         .groupBy("user_id")
@@ -481,13 +449,6 @@ def streaming_activity_close_tws(
 ) -> DataFrame:
     """Visit/session close-out on TWS event-time timers: watermark the
     event stream, key by user, and let timer expiry drive emission."""
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     return (
         events.withWatermark("ts", watermark)
         .select("user_id", "ts")
@@ -546,9 +507,6 @@ def make_seeded_totals_processor():
                 [{"user_id": user_id, "n_events": n, "sum_value": s}]
             )
 
-        def close(self) -> None:
-            pass
-
     return _SeededTotalsProcessor()
 
 
@@ -557,13 +515,6 @@ def streaming_seeded_totals_tws(
 ) -> DataFrame:
     """Running per-user totals over a live stream, seeded with a batch
     backfill aggregate through TWS ``initialState``."""
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(live_events.sparkSession)
     return (
         live_events.select("user_id", "value")
         .groupBy("user_id")
@@ -667,9 +618,6 @@ def make_session_cache_processor(gap_ms: int, retention_ms: int):
                 ]
             )
 
-        def close(self) -> None:
-            pass
-
     return _SessionCacheProcessor()
 
 
@@ -682,15 +630,6 @@ def streaming_session_cache_tws(
     """Session cache on TWS timers + ListState: watermark the event
     stream, key by user; timer expiry drives both the list eviction
     and the emission."""
-    from pyspark.sql import functions as F
-
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     return (
         events.withWatermark("ts", watermark)
         .select(
@@ -773,9 +712,6 @@ def make_ewma_processor(alpha: float = 0.2):
                 [{"user_id": user_id, "n_events": n, "ewma": y}]
             )
 
-        def close(self) -> None:
-            pass
-
     return _EwmaProcessor()
 
 
@@ -785,15 +721,6 @@ def streaming_ewma_tws(events: DataFrame, alpha: float = 0.2) -> DataFrame:
     running (n_events, ewma) per key per batch in update mode; the raw
     double is returned — callers round for presentation so the
     recursion itself never re-rounds."""
-    from pyspark.sql import functions as F
-
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     slim = events.select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -867,9 +794,6 @@ def make_holt_processor(alpha: float = 0.3, beta: float = 0.1):
                 ]
             )
 
-        def close(self) -> None:
-            pass
-
     return _HoltProcessor()
 
 
@@ -880,15 +804,6 @@ def streaming_holt_tws(
     ``transformWithStateInPandas`` (ValueState; RocksDB provider).
     Emits raw (level, trend) doubles — callers round/derive forecasts
     so the recursion never re-rounds."""
-    from pyspark.sql import functions as F
-
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     slim = events.select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -1042,9 +957,6 @@ def make_holt_winters_processor(
                 ]
             )
 
-        def close(self) -> None:
-            pass
-
     return _HoltWintersProcessor()
 
 
@@ -1060,15 +972,6 @@ def streaming_holt_winters_tws(
     half-up ``round(value * 100)`` runs SPARK-SIDE so the cents match
     the batch plan bit-for-bit (Python round() is banker's, out of
     contract here). Emits raw doubles; callers round/derive forecasts."""
-    from pyspark.sql import functions as F
-
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     slim = events.select(
         "event_type",
         F.expr("cast(unix_date(to_date(ts)) as bigint)").alias("day"),
@@ -1152,9 +1055,6 @@ def make_ew_anomaly_processor(alpha: float = 0.2, k: float = 3.0):
                 ]
             )
 
-        def close(self) -> None:
-            pass
-
     return _EwAnomalyProcessor()
 
 
@@ -1165,15 +1065,6 @@ def streaming_ew_anomaly_tws(
     ``transformWithStateInPandas`` (ValueState; RocksDB provider).
     Emits the running (n, mean, var, anomaly count) per key per batch
     in update mode — raw doubles, callers round for presentation."""
-    from pyspark.sql import functions as F
-
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        configure_worker_env,
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    configure_worker_env(events.sparkSession)
     slim = events.select(
         "user_id",
         F.unix_micros("ts").alias("us"),

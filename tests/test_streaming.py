@@ -553,11 +553,18 @@ def test_run_available_now_cleans_up_on_failure(spark, tmp_path):
     )
     # ANSI mode: integer division by zero throws at execution time
     bad = raw.withColumn("boom", F.expr("event_id div 0"))
+    stream_keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+    )
+    confs_before = {k: spark.conf.get(k, None) for k in stream_keys}
     before = {t.name for t in spark.catalog.listTables()}
     with _pytest.raises(Exception):
         run_available_now(bad, output_mode="append", state_partitions=2)
     after = {t.name for t in spark.catalog.listTables()}
     assert not {n for n in after - before if n.startswith("mem_")}
+    # the stream's confs are back to their pre-run values too
+    assert {k: spark.conf.get(k, None) for k in stream_keys} == confs_before
 
 
 def test_custom_stream_source_multibatch_exactly_once(spark):
@@ -1013,6 +1020,12 @@ def test_rocksdb_state_store_scope_sets_and_restores_confs(spark):
             assert spark.conf.get(clog_key) == "true"
         assert spark.conf.get(prov_key) == "com.example.FakeProvider"
         assert spark.conf.get(clog_key) == "false"
+        # case 3: the body raises -> restored all the same
+        with pytest.raises(RuntimeError, match="inside the scope"):
+            with rocksdb_state_store(spark):
+                raise RuntimeError("inside the scope")
+        assert spark.conf.get(prov_key) == "com.example.FakeProvider"
+        assert spark.conf.get(clog_key) == "false"
     finally:
         spark.conf.unset(prov_key)
         spark.conf.unset(clog_key)
@@ -1026,13 +1039,80 @@ def test_tws_state_partition_default_follows_core_budget(monkeypatch):
 
     monkeypatch.delenv("SPARK_GRAFT_TWS_STATE_PARTITIONS", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    assert R._default_tws_partitions() == 8
+    assert R.tws_state_partitions() == 8
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    assert R._default_tws_partitions() == 4
+    assert R.tws_state_partitions() == 4
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
-    assert R._default_tws_partitions() == 6
+    assert R.tws_state_partitions() == 6
     monkeypatch.setenv("SPARK_GRAFT_TWS_STATE_PARTITIONS", "12")
-    assert R._default_tws_partitions() == 12
+    assert R.tws_state_partitions() == 12
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "q_stream_upsert_sink",
+        pytest.param(
+            "q_stream_tws_forecast",
+            marks=pytest.mark.skipif(
+                not _has_protobuf(),
+                reason="transformWithStateInPandas needs google.protobuf",
+            ),
+        ),
+    ],
+)
+def test_foreach_batch_stateful_keys_unload_state_stores(spark, key):
+    """The foreachBatch serving keys run stateful streams outside the
+    memory-sink runners; they must still unload the idle state stores,
+    or the store maintenance pool keeps running in the session after
+    the query has ended."""
+    from conftest import SF_SMALL
+
+    from gps_stream_processing_spark.plans.registry import REGISTRY
+
+    state_store = (
+        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    )
+    assert REGISTRY[key].fn(spark, SF_SMALL).count() > 0
+    assert not state_store.isMaintenanceRunning()
+
+
+def test_conf_restores_and_worker_wiring_have_one_home():
+    """One implementation each: a temporary conf override is undone only
+    by ``session.scoped_conf`` (the one ``conf.unset``), and the protobuf
+    worker wiring runs only where a session is built or tuned, ahead of
+    its first Python function wrap."""
+    import ast
+    import pathlib
+
+    import gps_stream_processing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    unsets, wirings = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if (
+                    name == "unset"
+                    and isinstance(f, ast.Attribute)
+                    and isinstance(f.value, ast.Attribute)
+                    and f.value.attr == "conf"
+                ):
+                    unsets.add(rel)
+                if name in ("ensure_protobuf", "configure_worker_env"):
+                    if rel != "streaming/protobuf_compat.py":
+                        wirings.add((rel, owner))
+    assert unsets == {"session.py"}, sorted(unsets)
+    assert wirings == {
+        ("session.py", "get_spark"),
+        ("plans/registry.py", "tune_session"),
+    }, sorted(wirings)
 
 
 def test_state_store_provider_posture(spark, stream_fixture_dir, nmea_df):
