@@ -25,7 +25,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gps_stream_processing_spark.session import SESSION_CONF
+from gps_stream_processing_spark.session import SESSION_CONF, master_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -64,7 +64,9 @@ def tune_session(spark: SparkSession, sf_dir: str) -> None:
       rule yields thousands of partitions — it scales UP, not just down.
     - every conf in ``session.SESSION_CONF`` (AQE, UTC, Arrow transfer,
       the 64 MB broadcast threshold, CBO), the same set ``get_spark``
-      builds with.
+      builds with;
+    - ``session.master_conf`` for the session's master (the file-listing
+      threshold), as ``get_spark`` applies it.
     """
     if spark.conf.get(_TUNED_MARKER, None) == sf_dir:
         return
@@ -87,7 +89,11 @@ def tune_session(spark: SparkSession, sf_dir: str) -> None:
     # COMPRESSED verification inputs so width never collapses below a
     # useful parallelism while bytes are tiny.
     parts = max(4, min(2 * cores, n_bytes // (1 << 20) + 1))
-    conf = {**SESSION_CONF, "spark.sql.shuffle.partitions": str(parts)}
+    conf = {
+        **SESSION_CONF,
+        **master_conf(spark.sparkContext.master),
+        "spark.sql.shuffle.partitions": str(parts),
+    }
     for k, v in conf.items():
         try:
             spark.conf.set(k, v)

@@ -397,7 +397,6 @@ def q_stream_tws_fix_merge(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_ewma(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_ewma_tws,
     )
@@ -418,7 +417,6 @@ def q_stream_tws_ewma(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_holt(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_holt_tws,
     )
@@ -445,7 +443,6 @@ def q_stream_tws_holt(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_holt_winters_tws,
     )
@@ -555,7 +552,6 @@ def q_stream_tws_forecast(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_anomaly(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_ew_anomaly_tws,
     )
@@ -579,7 +575,6 @@ def q_stream_tws_anomaly(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_timers(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_activity_close_tws,
     )
@@ -594,7 +589,6 @@ def q_stream_tws_timers(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_timer_list(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_session_cache_tws,
     )
@@ -609,7 +603,6 @@ def q_stream_tws_timer_list(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_map_state(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_type_counts_tws,
     )
@@ -624,10 +617,7 @@ def q_stream_tws_map_state(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_recent_k(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import (
-        events_stream,
-        run_data_drained,
-    )
+    from gps_stream_processing_spark.streaming.runner import run_data_drained
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_recent_k_tws,
     )
@@ -1687,7 +1677,6 @@ def q_stream_progress(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_tws_init_state(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import events_stream
     from gps_stream_processing_spark.streaming.stateful import (
         streaming_seeded_totals_tws,
     )

@@ -55,7 +55,34 @@ SESSION_CONF: dict[str, str] = {
     # implementation declines every filter); load-bearing for the
     # nmea_synth track-pruning scan (q_custom_source_pushdown).
     "spark.sql.python.filterPushdown.enabled": "true",
+    # events.ts ships as TIMESTAMP(NANOS) in some testdata generations;
+    # Spark's parquet reader rejects NANOS unless it reads them as long
+    # (sources/tables.load_table and streaming/runner.events_stream
+    # truncate to micros). A scan reads this conf when it runs, so it
+    # is a session conf, not a scoped override.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+# The directory that holds this package: on the worker PYTHONPATH, it
+# lets ``python -m`` find the worker daemon from any working directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def master_conf(master: str) -> dict[str, str]:
+    """Confs that depend on where tasks run. Above the discovery
+    threshold, a file index lists its paths with a Spark job of one task
+    per path: a live file-stream batch of 33-54 files paid 416-579 ms in
+    ``getBatch`` for it, against 11-18 ms at 8 files or fewer. Under
+    ``local[...]`` those tasks run in the driver JVM anyway, so the
+    driver lists every batch itself; a cluster keeps Spark's 32, since
+    its executors spread object-store requests (``local-cluster[...]``
+    runs executor JVMs too)."""
+    local = master.split("[")[0] == "local"
+    return {
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": (
+            str(2**31 - 1) if local else "32"
+        ),
+    }
 
 
 @contextlib.contextmanager
@@ -76,6 +103,26 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def require_conf(spark: SparkSession, key: str, what: str) -> None:
+    """Raise unless ``spark`` carries ``SESSION_CONF[key]``. For a plan
+    whose meaning hangs on a session conf, run on a session that neither
+    ``get_spark`` nor ``tune_session`` set up. RuntimeError, not assert:
+    under ``python -O`` an assert strips and the plan silently reads
+    wrong."""
+    want = SESSION_CONF[key]
+    if spark.conf.get(key, None) != want:
+        raise RuntimeError(f"{what} requires {key}={want}")
+
+
+def append_worker_path(env: dict[str, str], path: str) -> None:
+    """Append ``path`` to the ``PYTHONPATH`` in ``env`` (a SparkContext's
+    ``environment``) unless it is there. Spark merges that entry into
+    every Python worker's path, after its own ``pyspark.zip``."""
+    paths = env.get("PYTHONPATH", "")
+    if path not in paths.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, (paths, path)))
 
 
 def default_parallelism() -> int:
@@ -120,6 +167,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config(map=SESSION_CONF)
         .config("spark.ui.enabled", "false")
+        # worker_daemon.py: pyspark.daemon without a zip re-read per task
+        .config(
+            "spark.python.daemon.module", "gps_stream_processing_spark.worker_daemon"
+        )
     )
     if master is not None:
         builder = builder.master(master)
@@ -128,7 +179,10 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    for k, v in master_conf(sc.master).items():
+        spark.conf.set(k, v)
     # Worker-env injection for a discovered protobuf runtime (TWS
     # support) must land BEFORE the session's first Python function
     # wraps: a later sc.environment change re-keys the worker-daemon
@@ -144,4 +198,7 @@ def get_spark(
 
     ensure_protobuf()
     configure_worker_env(spark)
+    # Same timing rule for the package root, which the worker daemon
+    # needs on its path wherever a worker starts.
+    append_worker_path(sc.environment, _PACKAGE_ROOT)
     return spark

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from gps_stream_processing_spark.schemas import TESTDATA_TABLES
+from gps_stream_processing_spark.session import require_conf
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -54,7 +55,8 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # events.ts has shipped as TIMESTAMP(NANOS) in some testdata
         # generations (which Spark's parquet reader rejects,
         # [PARQUET_TYPE_ILLEGAL]) and TIMESTAMP(MICROS, NTZ) in others.
-        # Handle both: nanos are read as long (legacy conf) and truncated
+        # Handle both: nanos are read as long (the session's legacy
+        # conf, checked here since the scan reads it) and truncated
         # to micros with integer division (`div`, not `/` — the ns epoch
         # ≈ 1.7e18 exceeds double's 53-bit mantissa), matching DuckDB's
         # ns→µs truncation bit-for-bit; NTZ micros are cast to the
@@ -62,7 +64,9 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        require_conf(
+            spark, "spark.sql.legacy.parquet.nanosAsLong", "load_table('events')"
+        )
         df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -71,13 +75,11 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # oracle timestamps) holds only under UTC sessions. get_spark pins
         # it, but load_table accepts any session — fail loudly instead of
         # silently shifting timestamps.
-        # RuntimeError, not assert: under `python -O` asserts strip and a
-        # non-UTC session would silently shift every events timestamp.
-        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-            raise RuntimeError(
-                "load_table('events') NTZ->timestamp cast requires "
-                "spark.sql.session.timeZone=UTC"
-            )
+        require_conf(
+            spark,
+            "spark.sql.session.timeZone",
+            "load_table('events') NTZ->timestamp cast",
+        )
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spark.read.parquet(path)
 

@@ -52,6 +52,8 @@ from __future__ import annotations
 import os
 import sys
 
+from gps_stream_processing_spark.session import append_worker_path
+
 # Public, well-known install locations of a pure-Python google.protobuf
 # runtime; extendable via the env var for unusual hosts. Each candidate
 # must contain google/protobuf/__init__.py to qualify.
@@ -218,11 +220,7 @@ def configure_worker_env(spark) -> None:
     except Exception:  # noqa: BLE001 — e.g. Spark Connect has no local sc
         return
     env[_DISABLE_FLAG] = "true"
-    prev = env.get("PYTHONPATH", "")
-    if _vendor_dir not in prev.split(os.pathsep):
-        env["PYTHONPATH"] = (
-            prev + os.pathsep + _vendor_dir if prev else _vendor_dir
-        )
+    append_worker_path(env, _vendor_dir)
 
 
 def tws_available() -> bool:

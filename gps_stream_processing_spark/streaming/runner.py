@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from gps_stream_processing_spark.session import default_parallelism, scoped_conf
+from gps_stream_processing_spark.session import (
+    default_parallelism,
+    require_conf,
+    scoped_conf,
+)
 from gps_stream_processing_spark.workdir import land_dir
 
 # State-partition width for the transformWithStateInPandas keys. The
@@ -129,7 +133,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("props", T.StringType()),
         ]
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    require_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "events_stream")
     # The streaming file source requires a *directory*; the testdata is a
     # single file (read-only) → expose it through a symlink dir.
     stream_dir = _stream_dir(parquet_file)
@@ -138,13 +142,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     # NTZ→TimestampType reinterprets the wall-clock in the session TZ;
     # epoch equality with the nanos path holds only under UTC sessions
-    # (get_spark pins it — RuntimeError, not assert, so a foreign session
-    # fails loudly even under `python -O` instead of shifting watermarks).
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        raise RuntimeError(
-            "events_stream NTZ->timestamp cast requires "
-            "spark.sql.session.timeZone=UTC"
-        )
+    # (get_spark pins it; a foreign session fails loudly instead of
+    # shifting watermarks).
+    require_conf(
+        spark, "spark.sql.session.timeZone", "events_stream NTZ->timestamp cast"
+    )
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 

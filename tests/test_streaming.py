@@ -4,9 +4,13 @@ the stateful fix-merge, plus window/watermark behavior smoke checks.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -418,6 +422,30 @@ def test_events_stream_raises_on_non_utc_session(spark, tmp_path):
     sib.conf.set("spark.sql.session.timeZone", "America/New_York")
     with pytest.raises(RuntimeError, match="timeZone=UTC"):
         events_stream(sib, str(tmp_path))
+
+
+def test_events_readers_need_the_session_nanos_conf(spark, tmp_path):
+    """``spark.sql.legacy.parquet.nanosAsLong`` is a session conf
+    (``SESSION_CONF``): ``load_table('events')`` and ``events_stream``
+    leave the caller's session as they found it, and raise on a session
+    without it instead of setting it there."""
+    import shutil
+
+    from conftest import SF_SMALL
+
+    from gps_stream_processing_spark.sources.tables import load_table
+    from gps_stream_processing_spark.streaming.runner import events_stream
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    shutil.copy(f"{SF_SMALL}/events.parquet", tmp_path / "events.parquet")
+    bare = spark.newSession()
+    bare.conf.unset(key)
+    with pytest.raises(RuntimeError, match=key):
+        load_table(bare, str(tmp_path), "events")
+    with pytest.raises(RuntimeError, match=key):
+        events_stream(bare, str(tmp_path))
+    assert bare.conf.get(key, None) != "true"
+    assert spark.conf.get(key) == "true"
 
 
 def test_run_available_now_leaves_no_sink_views(spark, stream_fixture_dir):
@@ -1079,40 +1107,196 @@ def test_foreach_batch_stateful_keys_unload_state_stores(spark, key):
 
 def test_conf_restores_and_worker_wiring_have_one_home():
     """One implementation each: a temporary conf override is undone only
-    by ``session.scoped_conf`` (the one ``conf.unset``), and the protobuf
-    worker wiring runs only where a session is built or tuned, ahead of
-    its first Python function wrap."""
+    by ``session.scoped_conf`` (the one ``conf.unset``); a conf is set
+    only where a session is built, tuned or scoped (``session.py``,
+    ``registry.tune_session``), never left behind by a plan; the
+    protobuf worker wiring runs only where a session is built or tuned,
+    ahead of its first Python function wrap; and the worker daemon is
+    chosen only where the SparkContext is built."""
     import ast
     import pathlib
 
     import gps_stream_processing_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    unsets, wirings = set(), set()
+    unsets, sets, wirings, daemons = set(), set(), set(), set()
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         for top in ast.parse(path.read_text()).body:
             owner = getattr(top, "name", "<module>")
             for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Constant)
+                    and node.value == "spark.python.daemon.module"
+                ):
+                    daemons.add((rel, owner))
                 if not isinstance(node, ast.Call):
                     continue
                 f = node.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
-                if (
-                    name == "unset"
-                    and isinstance(f, ast.Attribute)
+                on_conf = (
+                    isinstance(f, ast.Attribute)
                     and isinstance(f.value, ast.Attribute)
                     and f.value.attr == "conf"
-                ):
+                )
+                if on_conf and name == "unset":
                     unsets.add(rel)
+                if on_conf and name == "set":
+                    sets.add(rel)
                 if name in ("ensure_protobuf", "configure_worker_env"):
                     if rel != "streaming/protobuf_compat.py":
                         wirings.add((rel, owner))
     assert unsets == {"session.py"}, sorted(unsets)
+    assert sets == {"session.py", "plans/registry.py"}, sorted(sets)
     assert wirings == {
         ("session.py", "get_spark"),
         ("plans/registry.py", "tune_session"),
     }, sorted(wirings)
+    assert daemons == {("session.py", "get_spark")}, sorted(daemons)
+
+
+def test_worker_rereads_no_unchanged_archive(spark):
+    """PySpark calls ``importlib.invalidate_caches()`` at the start of
+    every task. Before CPython 3.13 each cached zipimporter then re-read
+    its whole archive directory (pyspark.zip, the spark-core jar): 135-
+    196 ms a task. Under the engine's worker daemon an unchanged archive
+    is not read again."""
+    import sys
+
+    def probe(_):
+        import importlib
+        import zipimport
+
+        importlib.invalidate_caches()
+        reads, read = [], zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        cache = sys.path_importer_cache.values()
+        yield sum(isinstance(f, zipimport.zipimporter) for f in cache), reads
+
+    rdd = spark.sparkContext.parallelize(range(2), 2)
+    for n_zip, reads in rdd.mapPartitions(probe).collect():
+        assert n_zip > 0  # the worker path does hold archives
+        assert reads == []
+
+
+def test_worker_daemon_rereads_an_archive_rewritten_in_place(tmp_path):
+    """What invalidation must keep: a rewritten archive is read again,
+    and its new module imports. The new archive has the old one's size
+    and only a later mtime tells them apart."""
+    import subprocess
+    import sys
+
+    script = r"""
+import importlib, os, sys, zipfile
+from gps_stream_processing_spark import worker_daemon
+
+worker_daemon.install()
+archive = sys.argv[1]
+
+def write(name, value):
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{name}.py", f"VALUE = {value}\n")
+
+write("zold", 1)
+sys.path.insert(0, archive)
+import zold
+importlib.invalidate_caches()
+st = os.stat(archive)
+write("znew", 2)
+os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+assert os.stat(archive).st_size == st.st_size
+importlib.invalidate_caches()
+import znew
+print(zold.VALUE, znew.VALUE)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "m.zip")],
+        capture_output=True,
+        text=True,
+        timeout=60,
+        env={**os.environ, "PYTHONPATH": _REPO_ROOT},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["1", "2"]
+
+
+def test_get_spark_daemon_starts_outside_the_checkout(tmp_path):
+    """The worker daemon starts wherever a worker does: a driver whose
+    working directory is outside the checkout, and which finds the
+    package only through ``sys.path``, runs a plain pandas UDF."""
+    import subprocess
+    import sys
+
+    script = f"""
+import sys
+sys.path.insert(0, {_REPO_ROOT!r})
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from gps_stream_processing_spark.session import get_spark
+
+spark = get_spark(app_name="daemon-probe", master="local[1]", shuffle_partitions=1)
+
+@pandas_udf("long")
+def plus_one(s: pd.Series) -> pd.Series:
+    return s + 1
+
+print(spark.sparkContext.getConf().get("spark.python.daemon.module"))
+print(spark.range(3).select(plus_one("id")).toPandas().iloc[:, 0].tolist())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "512m"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.splitlines()[-2:] == [
+        "gps_stream_processing_spark.worker_daemon",
+        "[1, 2, 3]",
+    ]
+
+
+def test_file_stream_batch_lists_its_files_on_the_driver(spark, tmp_path):
+    """A file-stream batch of more than 32 new files (Spark's discovery
+    threshold) listed them with a Spark job of one task per file:
+    416-579 ms of ``getBatch`` per live fix_stream_live batch. Under a
+    local master the engine session lists them on the driver; a cluster
+    master keeps Spark's 32."""
+    from gps_stream_processing_spark.session import master_conf
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    masters = ("local[4]", "local", "local-cluster[2,1,1024]", "yarn")
+    assert [master_conf(m)[key] for m in masters] == [str(2**31 - 1)] * 2 + ["32"] * 2
+    assert spark.conf.get(key) == str(2**31 - 1)
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(40):
+        (src / f"f{i:02d}.json").write_text(f'{{"x": {i}}}\n')
+    q = (
+        spark.readStream.schema("x long")
+        .json(str(src))
+        .writeStream.format("noop")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert [p["numInputRows"] for p in q.recentProgress] == [40]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    store = spark.sparkContext._jsc.sc().statusStore()
+    descriptions = [str(store.job(j).description()) for j in jobs]
+    assert jobs, descriptions
+    assert not [d for d in descriptions if "Listing leaf files" in d], descriptions
 
 
 def test_state_store_provider_posture(spark, stream_fixture_dir, nmea_df):
