@@ -6996,7 +6996,7 @@ def _smoother_cap_guard(key: str):
     "the buffer builds, so it names the offending key whenever the "
     "job survives that far; see _smoother_cap_guard). The "
     "unbounded-stream twin is SHIPPED: "
-    "q_stream_tws_ewma (streaming/stateful.py make_ewma_processor), "
+    "q_stream_tws_ewma (streaming/stateful.py ewma_fold), "
     "a TWS ValueState holding just (n, y_(t-1)) — O(1) per key "
     "forever, bit-identical fold.",
 )
@@ -9317,7 +9317,7 @@ def sax_symbols(events: DataFrame) -> DataFrame:
     "(sessions/days), same assert_true tripwire at "
     "SMOOTHER_MAX_EVENTS_PER_KEY; the unbounded-stream twin is "
     "SHIPPED as q_stream_tws_holt (streaming/stateful.py "
-    "make_holt_processor — ValueState (n, l, b), bit-identical fold, "
+    "holt_fold — ValueState (n, l, b), bit-identical fold, "
     "O(1) per key forever).",
 )
 def q_holt_linear(spark: SparkSession, sf: str) -> DataFrame:

@@ -11,18 +11,38 @@ engine surface the north star mandates on top.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gps_stream_processing_spark.operators.gps_fix import parse_sentences
 from gps_stream_processing_spark.plans.nmea_oracle import ORACLE_STREAM_FIX_MERGE
 from gps_stream_processing_spark.plans.registry import register, table
 from gps_stream_processing_spark.session import scoped_conf
 from gps_stream_processing_spark.streaming.runner import (
     events_stream,
-    rocksdb_state_store,
+    make_latest_upsert,
     run_available_now,
-    tws_state_partitions,
+    run_data_drained,
+    run_foreach_batch,
+    run_tws,
     unload_idle_state_stores,
+)
+from gps_stream_processing_spark.streaming.stateful import (
+    nmea_json_stream,
+    streaming_activity_close_tws,
+    streaming_ew_anomaly_tws,
+    streaming_ewma_tws,
+    streaming_fix_merge,
+    streaming_fix_merge_tws,
+    streaming_holt_tws,
+    streaming_holt_winters_tws,
+    streaming_recent_k_tws,
+    streaming_seeded_totals_tws,
+    streaming_session_cache_tws,
+    streaming_type_counts_tws,
+    write_nmea_fixture_json,
 )
 from gps_stream_processing_spark.workdir import land_dir
 
@@ -135,21 +155,20 @@ def q_stream_session(spark: SparkSession, sf: str) -> DataFrame:
     "(plans/nmea_oracle.py), with is_final mirroring the eviction bound.",
 )
 def q_stream_fix_merge(spark: SparkSession, sf: str) -> DataFrame:
-
-    from gps_stream_processing_spark.operators.gps_fix import parse_sentences
-    from gps_stream_processing_spark.streaming.stateful import (
-        nmea_json_stream,
-        streaming_fix_merge,
-        write_nmea_fixture_json,
+    return run_available_now(
+        streaming_fix_merge(_parsed_nmea_stream(spark, sf)), output_mode="update"
     )
 
-    d = land_dir("nmea_stream", sf)
+
+def _parsed_nmea_stream(spark: SparkSession, sf: str) -> DataFrame:
+    """The 3-receiver × 120 s NMEA fixture as a parsed sentence
+    stream; its JSON-lines file is written on first use."""
     import os
 
+    d = land_dir("nmea_stream", sf)
     if not os.path.exists(os.path.join(d, "nmea.jsonl")):
         write_nmea_fixture_json(d, n_tracks=3, n_seconds=120)
-    parsed = parse_sentences(nmea_json_stream(spark, d))
-    return run_available_now(streaming_fix_merge(parsed), output_mode="update")
+    return parse_sentences(nmea_json_stream(spark, d))
 
 
 @register(
@@ -336,307 +355,6 @@ def q_stream_stream_full_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# The keys whose REGISTRATION is gated on the protobuf probe below —
-# the single source of truth for "how many keys does this environment
-# lack": tools/check_counts.py subtracts these from the documented
-# full-registry count when the probe fails, and
-# tests/test_entry.py::test_tws_key_presence_matches_capability
-# asserts presence tracks the probe for every listed key.
-TWS_GATED_KEYS = (
-    "q_stream_tws_ewma",
-    "q_stream_tws_holt",
-    "q_stream_tws_holt_winters",
-    "q_stream_tws_forecast",
-    "q_stream_tws_anomaly",
-    "q_stream_tws_fix_merge",
-    "q_stream_tws_init_state",
-    "q_stream_tws_map_state",
-    "q_stream_tws_recent_k",
-    "q_stream_tws_timer_list",
-    "q_stream_tws_timers",
-)
-
-
-def _tws_available() -> bool:
-    """``transformWithStateInPandas`` boots Python workers that speak
-    protobuf to the JVM state server; without ``google.protobuf`` they
-    crash at init. The probe (streaming/protobuf_compat.py) first tries
-    the native import, then discovers a pure-Python protobuf runtime at
-    well-known public install locations (e.g. the Cloud SDK's vendored
-    copy) and verifies the pyspark gencode round-trips against it — so
-    the query registers exactly where the API can actually run. Worker
-    propagation rides ``registry.tune_session`` →
-    ``configure_worker_env``."""
-    from gps_stream_processing_spark.streaming.protobuf_compat import (
-        tws_available,
-    )
-
-    return tws_available()
-
-
-def q_stream_tws_fix_merge(spark: SparkSession, sf: str) -> DataFrame:
-    import os
-
-    from gps_stream_processing_spark.operators.gps_fix import parse_sentences
-    from gps_stream_processing_spark.streaming.stateful import (
-        nmea_json_stream,
-        streaming_fix_merge_tws,
-        write_nmea_fixture_json,
-    )
-
-    d = land_dir("nmea_stream", sf)
-    if not os.path.exists(os.path.join(d, "nmea.jsonl")):
-        write_nmea_fixture_json(d, n_tracks=3, n_seconds=120)
-    with rocksdb_state_store(spark):
-        parsed = parse_sentences(nmea_json_stream(spark, d))
-        return run_available_now(
-            streaming_fix_merge_tws(parsed),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-
-
-def q_stream_tws_ewma(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_ewma_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        out = run_available_now(
-            streaming_ewma_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-        # presentation rounding happens HERE (Spark-side, the same
-        # F.round as the batch q_ewma) — the processor state and its
-        # emissions stay raw doubles so the recursion never re-rounds
-        return out.select(
-            "user_id", "n_events", F.round("ewma", 6).alias("ewma")
-        )
-
-
-def q_stream_tws_holt(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_holt_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        out = run_available_now(
-            streaming_holt_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-        # rounding + the h-step forecast derive HERE (Spark-side, the
-        # same expressions as the batch q_holt_linear) — the processor
-        # state stays raw doubles
-        return out.select(
-            "user_id",
-            "n_events",
-            F.round("level", 6).alias("level"),
-            F.round("trend", 6).alias("trend"),
-            F.round(
-                F.col("level") + F.lit(7.0) * F.col("trend"), 6
-            ).alias("forecast_7"),
-        )
-
-
-def q_stream_tws_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_holt_winters_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        out = run_available_now(
-            streaming_holt_winters_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-        # rounding + the 1-/7-step seasonal forecasts derive HERE with
-        # the batch q_holt_winters expression tree (level + 1.0*trend +
-        # s, NULL-propagating like try_element_at) — the processor
-        # state and emissions stay raw doubles
-        z = F.lit(0.0)
-        return out.select(
-            "event_type",
-            "n_days",
-            (F.round("level", 6) + z).alias("level"),
-            (F.round("trend", 6) + z).alias("trend"),
-            (
-                F.round(
-                    F.col("level")
-                    + F.lit(1.0) * F.col("trend")
-                    + F.col("s_next"),
-                    6,
-                )
-                + z
-            ).alias("forecast_1"),
-            (
-                F.round(
-                    F.col("level")
-                    + F.lit(7.0) * F.col("trend")
-                    + F.col("s_last"),
-                    6,
-                )
-                + z
-            ).alias("forecast_7"),
-        )
-
-
-def q_stream_tws_forecast(spark: SparkSession, sf: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
-    from gps_stream_processing_spark.streaming.runner import make_latest_upsert
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_holt_tws,
-    )
-
-    base = os.path.join(land_dir("tws_forecast", sf), uuid.uuid4().hex)
-    serving = os.path.join(base, "serving")
-    ckpt = os.path.join(base, "ckpt")
-    # latest emission per user wins — the serving table IS the
-    # dashboard's current forecast set
-    upsert = make_latest_upsert(spark, serving, "user_id")
-
-    try:
-        with scoped_conf(
-            spark, {"spark.sql.shuffle.partitions": str(tws_state_partitions())}
-        ), rocksdb_state_store(spark):
-            out = streaming_holt_tws(events_stream(spark, sf))
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        unload_idle_state_stores(spark)
-    # serving stores RAW state doubles; presentation rounding and
-    # the h-step forecasts derive at READ time with the batch
-    # q_holt_linear expression tree. The result is snapshotted
-    # (eager localCheckpoint) and the per-call uuid dir removed —
-    # a bench/driver session calls this key repeatedly and must
-    # not accumulate O(#users) serving tables on disk (the
-    # run_available_now memory-sink hygiene discipline).
-    z = F.lit(0.0)
-    res = (
-        spark.read.parquet(serving)
-        .select(
-            "user_id",
-            "n_events",
-            (F.round("level", 6) + z).alias("level"),
-            (F.round("trend", 6) + z).alias("trend"),
-            (
-                F.round(
-                    F.col("level") + F.lit(1.0) * F.col("trend"), 6
-                )
-                + z
-            ).alias("forecast_1"),
-            (
-                F.round(
-                    F.col("level") + F.lit(7.0) * F.col("trend"), 6
-                )
-                + z
-            ).alias("forecast_7"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return res
-
-
-def q_stream_tws_anomaly(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_ew_anomaly_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        out = run_available_now(
-            streaming_ew_anomaly_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-        # presentation rounding HERE — processor state stays raw
-        z = F.lit(0.0)
-        return out.select(
-            "user_id",
-            "n_events",
-            (F.round("ew_mean", 6) + z).alias("ew_mean"),
-            (F.round("ew_var", 6) + z).alias("ew_var"),
-            "n_anomalies",
-        )
-
-
-def q_stream_tws_timers(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_activity_close_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        return run_available_now(
-            streaming_activity_close_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-
-
-def q_stream_tws_timer_list(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_session_cache_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        return run_available_now(
-            streaming_session_cache_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-
-
-def q_stream_tws_map_state(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_type_counts_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        return run_available_now(
-            streaming_type_counts_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-
-
-def q_stream_tws_recent_k(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.runner import run_data_drained
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_recent_k_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        ev = events_stream(spark, sf)
-        # run_data_drained, NOT availableNow/processAllAvailable: in
-        # timeMode=ProcessingTime (required to arm state TTL) the
-        # engine schedules "no new data but cleaning up state"
-        # maintenance batches forever, so neither terminator's
-        # quiescence condition is ever met — the drained-commit poll in
-        # the runner is the terminating drive for this mode.
-        return run_data_drained(
-            streaming_recent_k_tws(ev),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-
-
 # Full oracle for the ListState last-k retention: per user, the 5 most
 # recent events by (ms-floored event time, event_id) — the exact order
 # key the processor trims on, so micro-batch boundaries cannot move the
@@ -678,27 +396,28 @@ ORACLE_STREAM_TWS_TIMERS = """
 """
 
 
-if not _tws_available():
-    # One loud line instead of a silent key-set drift: the registry count
-    # differs across environments only because of this gate.
-    import warnings
+@register(
+    "q_stream_tws_fix_merge",
+    oracle=ORACLE_STREAM_FIX_MERGE,
+    doc="The stateful fix-merge on Spark 4's transformWithStateInPandas "
+    "API (typed ValueState on the RocksDB state store — the successor "
+    "to applyInPandasWithState, adding timers/TTL/multiple state "
+    "variables for production eviction). Same merge core, same fixture, "
+    "same full oracle as q_stream_fix_merge (plans/nmea_oracle.py).",
+)
+def q_stream_tws_fix_merge(spark: SparkSession, sf: str) -> DataFrame:
+    return run_tws(streaming_fix_merge_tws(_parsed_nmea_stream(spark, sf)))
 
-    warnings.warn(
-        "q_stream_tws_fix_merge / q_stream_tws_timers not registered: "
-        "transformWithStateInPandas needs google.protobuf, absent in "
-        "this environment",
-        stacklevel=1,
-    )
-else:
-    q_stream_tws_ewma = register(
-        "q_stream_tws_ewma",
-        # Same recursion, same fold order, same literals as the batch
-        # q_ewma oracle: y_t = acc*0.8 + x*0.2 over each user's
-        # (ts, event_id)-ordered values, first value as init. The
-        # availableNow one-file replay folds every user's history in
-        # one batch, so the streaming emission IS the batch fold —
-        # bit-identical doubles, rounded 6 dp Spark-side like q_ewma.
-        oracle="""
+
+@register(
+    "q_stream_tws_ewma",
+    # Same recursion, same fold order, same literals as the batch
+    # q_ewma oracle: y_t = acc*0.8 + x*0.2 over each user's
+    # (ts, event_id)-ordered values, first value as init. The
+    # availableNow one-file replay folds every user's history in
+    # one batch, so the streaming emission IS the batch fold —
+    # bit-identical doubles, rounded 6 dp Spark-side like q_ewma.
+    oracle="""
         SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
                ROUND(list_reduce(list(CAST(value AS DOUBLE)
                      ORDER BY ts, event_id),
@@ -706,26 +425,33 @@ else:
                                  + x * CAST(0.2 AS DOUBLE)), 6) AS ewma
         FROM events GROUP BY user_id
         """,
-        doc="O(1)-per-key STREAMING EWMA on transformWithStateInPandas "
-        "ValueState (SURVEY §2.8 — the unbounded-key twin that "
-        "q_ewma/q_holt_linear's docstrings name as their 100 TB scale "
-        "path, shipped: VERDICT r14 item 1): per-user state is just "
-        "(n, y_(t-1)) — 16 bytes per key forever, versus the batch "
-        "fold's full-history aggregation buffer — each batch folds its "
-        "(ts, event_id)-sorted rows into the carried value with the "
-        "exact IEEE sequence of the batch fold, so the availableNow "
-        "replay is bit-identical to q_ewma per user. At scale: state "
-        "O(#keys), work O(batch), no collect_list anywhere; a hot key "
-        "with 10^8 events costs the same state as a cold one.",
-    )(q_stream_tws_ewma)
+    doc="O(1)-per-key STREAMING EWMA on transformWithStateInPandas "
+    "ValueState (SURVEY §2.8 — the unbounded-key twin that "
+    "q_ewma/q_holt_linear's docstrings name as their 100 TB scale "
+    "path, shipped: VERDICT r14 item 1): per-user state is just "
+    "(n, y_(t-1)) — 16 bytes per key forever, versus the batch "
+    "fold's full-history aggregation buffer — each batch folds its "
+    "(ts, event_id)-sorted rows into the carried value with the "
+    "exact IEEE sequence of the batch fold, so the availableNow "
+    "replay is bit-identical to q_ewma per user. At scale: state "
+    "O(#keys), work O(batch), no collect_list anywhere; a hot key "
+    "with 10^8 events costs the same state as a cold one.",
+)
+def q_stream_tws_ewma(spark: SparkSession, sf: str) -> DataFrame:
+    out = run_tws(streaming_ewma_tws(events_stream(spark, sf)))
+    # presentation rounding happens HERE (Spark-side, the same
+    # F.round as the batch q_ewma) — the processor state and its
+    # emissions stay raw doubles so the recursion never re-rounds
+    return out.select("user_id", "n_events", F.round("ewma", 6).alias("ewma"))
 
-    q_stream_tws_holt = register(
-        "q_stream_tws_holt",
-        # The q_holt_linear oracle verbatim: same recursion, same fold
-        # order, same literals, same LIST-accumulator encoding (the
-        # DuckDB struct-mutation pitfall), init (x1, 0). availableNow
-        # folds every user in one batch -> streaming == batch fold.
-        oracle="""
+
+@register(
+    "q_stream_tws_holt",
+    # The q_holt_linear oracle verbatim: same recursion, same fold
+    # order, same literals, same LIST-accumulator encoding (the
+    # DuckDB struct-mutation pitfall), init (x1, 0). availableNow
+    # folds every user in one batch -> streaming == batch fold.
+    oracle="""
         SELECT user_id, CAST(cnt AS BIGINT) AS n_events,
                ROUND(hw[1], 6) AS level,
                ROUND(hw[2], 6) AS trend,
@@ -747,26 +473,39 @@ else:
           FROM events GROUP BY user_id
         ) t(user_id, cnt, hw)
         """,
-        doc="O(1)-state STREAMING Holt linear-trend smoothing on "
-        "transformWithStateInPandas ValueState (SURVEY §2.8 — the "
-        "(l, b) sibling of q_stream_tws_ewma, so BOTH batch "
-        "collect-then-fold smoothers now have their shipped "
-        "unbounded-key twin): per-user state is (n, level, trend) — "
-        "24 bytes per key forever — each batch folds its "
-        "(ts, event_id)-sorted values with the exact IEEE expression "
-        "tree of the batch fold (new level recomputed inside the "
-        "trend update), so the availableNow replay is bit-identical "
-        "to q_holt_linear per user, h-step forecast derived at "
-        "emission. At scale: state O(#keys), work O(batch).",
-    )(q_stream_tws_holt)
+    doc="O(1)-state STREAMING Holt linear-trend smoothing on "
+    "transformWithStateInPandas ValueState (SURVEY §2.8 — the "
+    "(l, b) sibling of q_stream_tws_ewma, so BOTH batch "
+    "collect-then-fold smoothers now have their shipped "
+    "unbounded-key twin): per-user state is (n, level, trend) — "
+    "24 bytes per key forever — each batch folds its "
+    "(ts, event_id)-sorted values with the exact IEEE expression "
+    "tree of the batch fold (new level recomputed inside the "
+    "trend update), so the availableNow replay is bit-identical "
+    "to q_holt_linear per user, h-step forecast derived at "
+    "emission. At scale: state O(#keys), work O(batch).",
+)
+def q_stream_tws_holt(spark: SparkSession, sf: str) -> DataFrame:
+    out = run_tws(streaming_holt_tws(events_stream(spark, sf)))
+    # rounding + the h-step forecast derive HERE (Spark-side, the
+    # same expressions as the batch q_holt_linear) — the processor
+    # state stays raw doubles
+    return out.select(
+        "user_id",
+        "n_events",
+        F.round("level", 6).alias("level"),
+        F.round("trend", 6).alias("trend"),
+        F.round(F.col("level") + F.lit(7.0) * F.col("trend"), 6).alias("forecast_7"),
+    )
 
-    q_stream_tws_holt_winters = register(
-        "q_stream_tws_holt_winters",
-        # The q_holt_winters oracle VERBATIM (plans/relational.py):
-        # same day grid, same seed, same flat 9-list fold, same
-        # literals — the availableNow one-batch replay folds every
-        # type's full day series, so streaming == batch bit-for-bit.
-        oracle="""
+
+@register(
+    "q_stream_tws_holt_winters",
+    # The q_holt_winters oracle VERBATIM (plans/relational.py):
+    # same day grid, same seed, same flat 9-list fold, same
+    # literals — the availableNow one-batch replay folds every
+    # type's full day series, so streaming == batch bit-for-bit.
+    oracle="""
         WITH daily AS (
           SELECT event_type, CAST(ts AS DATE) AS day,
                  CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
@@ -813,34 +552,56 @@ else:
                  AS forecast_7
         FROM folded
         """,
-        doc="O(1)-state STREAMING Holt-Winters additive seasonal "
-        "smoothing on transformWithStateInPandas ValueState (SURVEY "
-        "§2.8 — the SEASONAL member completing the streaming smoother "
-        "family q_stream_tws_ewma → q_stream_tws_holt → here, the "
-        "twin the batch q_holt_winters names as its unbounded-key "
-        "path: VERDICT r15 item 3): per-type state is the batch "
-        "fold's flat 9-list [l, b, s1..s7] plus the pre-seed buffer "
-        "and the trailing OPEN day's exact integer cents — bounded "
-        "~150 bytes per key forever. Days close (cast to double, "
-        "fold) only when a later day arrives; each emission folds the "
-        "open day virtually, so a day split across micro-batches "
-        "folds exactly once with its full total and every emission "
-        "equals the batch fold over the days seen so far. "
-        "availableNow replay is bit-identical to q_holt_winters "
-        "(identical IEEE expression tree, literals written directly); "
-        "1-/7-step seasonal forecasts derive Spark-side at emission. "
-        "At scale: state O(#keys), work O(batch), the day grid never "
-        "materializes anywhere.",
-    )(q_stream_tws_holt_winters)
+    doc="O(1)-state STREAMING Holt-Winters additive seasonal "
+    "smoothing on transformWithStateInPandas ValueState (SURVEY "
+    "§2.8 — the SEASONAL member completing the streaming smoother "
+    "family q_stream_tws_ewma → q_stream_tws_holt → here, the "
+    "twin the batch q_holt_winters names as its unbounded-key "
+    "path: VERDICT r15 item 3): per-type state is the batch "
+    "fold's flat 9-list [l, b, s1..s7] plus the pre-seed buffer "
+    "and the trailing OPEN day's exact integer cents — bounded "
+    "~150 bytes per key forever. Days close (cast to double, "
+    "fold) only when a later day arrives; each emission folds the "
+    "open day virtually, so a day split across micro-batches "
+    "folds exactly once with its full total and every emission "
+    "equals the batch fold over the days seen so far. "
+    "availableNow replay is bit-identical to q_holt_winters "
+    "(identical IEEE expression tree, literals written directly); "
+    "1-/7-step seasonal forecasts derive Spark-side at emission. "
+    "At scale: state O(#keys), work O(batch), the day grid never "
+    "materializes anywhere.",
+)
+def q_stream_tws_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
+    out = run_tws(streaming_holt_winters_tws(events_stream(spark, sf)))
+    # rounding + the 1-/7-step seasonal forecasts derive HERE with
+    # the batch q_holt_winters expression tree (level + 1.0*trend +
+    # s, NULL-propagating like try_element_at) — the processor
+    # state and emissions stay raw doubles
+    z = F.lit(0.0)
+    return out.select(
+        "event_type",
+        "n_days",
+        (F.round("level", 6) + z).alias("level"),
+        (F.round("trend", 6) + z).alias("trend"),
+        (
+            F.round(F.col("level") + F.lit(1.0) * F.col("trend") + F.col("s_next"), 6)
+            + z
+        ).alias("forecast_1"),
+        (
+            F.round(F.col("level") + F.lit(7.0) * F.col("trend") + F.col("s_last"), 6)
+            + z
+        ).alias("forecast_7"),
+    )
 
-    q_stream_tws_forecast = register(
-        "q_stream_tws_forecast",
-        # The q_holt_linear fold oracle with the 1-step forecast
-        # column added: the serving table holds the LATEST emission
-        # per user, which after the availableNow replay is the full
-        # batch fold — so the dashboard read equals the batch
-        # forecast at the final watermark.
-        oracle="""
+
+@register(
+    "q_stream_tws_forecast",
+    # The q_holt_linear fold oracle with the 1-step forecast
+    # column added: the serving table holds the LATEST emission
+    # per user, which after the availableNow replay is the full
+    # batch fold — so the dashboard read equals the batch
+    # forecast at the final watermark.
+    oracle="""
         SELECT user_id, CAST(cnt AS BIGINT) AS n_events,
                ROUND(hw[1], 6) + 0.0 AS level,
                ROUND(hw[2], 6) + 0.0 AS trend,
@@ -865,29 +626,72 @@ else:
           FROM events GROUP BY user_id
         ) t(user_id, cnt, hw)
         """,
-        doc="LIVE FORECAST SERVING — the composed end-to-end 'capacity "
-        "dashboard' key (SURVEY §2.8, VERDICT r15 item 8): the "
-        "q_stream_tws_holt O(1)-state smoother's per-batch emissions "
-        "flow through the q_stream_upsert_sink atomic-swap upsert "
-        "keyed by user_id, so the serving parquet always holds each "
-        "user's LATEST (n, level, trend) and the dashboard derives "
-        "1-/7-step forecasts at read time. Zero new state machinery — "
-        "two shipped pieces composed; oracle = the batch fold at the "
-        "final watermark (the serving table's defining property). At "
-        "scale: state O(#keys) in RocksDB, serving table O(#keys), "
-        "per-batch work O(batch) + an O(#keys) merge-swap (in "
-        "production the sink is a MERGE INTO a lakehouse table - "
-        "plan shape identical).",
-    )(q_stream_tws_forecast)
+    doc="LIVE FORECAST SERVING — the composed end-to-end 'capacity "
+    "dashboard' key (SURVEY §2.8, VERDICT r15 item 8): the "
+    "q_stream_tws_holt O(1)-state smoother's per-batch emissions "
+    "flow through the q_stream_upsert_sink atomic-swap upsert "
+    "keyed by user_id, so the serving parquet always holds each "
+    "user's LATEST (n, level, trend) and the dashboard derives "
+    "1-/7-step forecasts at read time. Zero new state machinery — "
+    "two shipped pieces composed; oracle = the batch fold at the "
+    "final watermark (the serving table's defining property). At "
+    "scale: state O(#keys) in RocksDB, serving table O(#keys), "
+    "per-batch work O(batch) + an O(#keys) merge-swap (in "
+    "production the sink is a MERGE INTO a lakehouse table - "
+    "plan shape identical).",
+)
+def q_stream_tws_forecast(spark: SparkSession, sf: str) -> DataFrame:
+    import os
+    import shutil
+    import uuid
 
-    q_stream_tws_anomaly = register(
-        "q_stream_tws_anomaly",
-        # The same fold in DuckDB: 4-list state [m, v, na, n], lifted
-        # first element as init ([x1, 0, 0, 1]), flag scored from the
-        # PRE-update state (n >= 5 warm-up), RiskMetrics EW variance
-        # with the OLD mean in the deviation — identical expression
-        # trees, sqrt is IEEE on both engines.
-        oracle="""
+    base = os.path.join(land_dir("tws_forecast", sf), uuid.uuid4().hex)
+    serving = os.path.join(base, "serving")
+    # latest emission per user wins — the serving table IS the
+    # dashboard's current forecast set
+    upsert = make_latest_upsert(spark, serving, "user_id")
+    run_tws(
+        streaming_holt_tws(events_stream(spark, sf)),
+        functools.partial(
+            run_foreach_batch, body=upsert, checkpoint=os.path.join(base, "ckpt")
+        ),
+    )
+    # serving stores RAW state doubles; presentation rounding and
+    # the h-step forecasts derive at READ time with the batch
+    # q_holt_linear expression tree. The result is snapshotted
+    # (eager localCheckpoint) and the per-call uuid dir removed —
+    # a bench/driver session calls this key repeatedly and must
+    # not accumulate O(#users) serving tables on disk (the
+    # run_available_now memory-sink hygiene discipline).
+    z = F.lit(0.0)
+    res = (
+        spark.read.parquet(serving)
+        .select(
+            "user_id",
+            "n_events",
+            (F.round("level", 6) + z).alias("level"),
+            (F.round("trend", 6) + z).alias("trend"),
+            (F.round(F.col("level") + F.lit(1.0) * F.col("trend"), 6) + z).alias(
+                "forecast_1"
+            ),
+            (F.round(F.col("level") + F.lit(7.0) * F.col("trend"), 6) + z).alias(
+                "forecast_7"
+            ),
+        )
+        .localCheckpoint(eager=True)
+    )
+    shutil.rmtree(base, ignore_errors=True)
+    return res
+
+
+@register(
+    "q_stream_tws_anomaly",
+    # The same fold in DuckDB: 4-list state [m, v, na, n], lifted
+    # first element as init ([x1, 0, 0, 1]), flag scored from the
+    # PRE-update state (n >= 5 warm-up), RiskMetrics EW variance
+    # with the OLD mean in the deviation — identical expression
+    # trees, sqrt is IEEE on both engines.
+    oracle="""
         SELECT user_id, CAST(st[4] AS BIGINT) AS n_events,
                ROUND(st[1], 6) + 0.0 AS ew_mean,
                ROUND(st[2], 6) + 0.0 AS ew_var,
@@ -920,46 +724,61 @@ else:
           ) s(user_id, vals)
         ) t(user_id, st)
         """,
-        doc="O(1)-state STREAMING ANOMALY detection on "
-        "transformWithStateInPandas ValueState (SURVEY §2.8 — the "
-        "live SLO-alert member of the TWS family, pairing the batch "
-        "q_anomaly_rolling which needs a 20-row window per key): "
-        "per-user state is (n, ew_mean, ew_var, n_anomalies) — 32 "
-        "bytes per key forever — each event is scored against the "
-        "PRE-update state (flag when n >= 5 and |x - m| > 3*sqrt(v); "
-        "no lookahead, warm-up guarded), then the RiskMetrics EW "
-        "mean/variance update with the OLD mean in the deviation. "
-        "availableNow replay is bit-identical to the DuckDB fold "
-        "(IEEE sqrt, literals written directly). At scale: state "
-        "O(#keys), work O(batch) — the alert evaluates inline with "
-        "ingestion, no windowed re-aggregation pass.",
-    )(q_stream_tws_anomaly)
+    doc="O(1)-state STREAMING ANOMALY detection on "
+    "transformWithStateInPandas ValueState (SURVEY §2.8 — the "
+    "live SLO-alert member of the TWS family, pairing the batch "
+    "q_anomaly_rolling which needs a 20-row window per key): "
+    "per-user state is (n, ew_mean, ew_var, n_anomalies) — 32 "
+    "bytes per key forever — each event is scored against the "
+    "PRE-update state (flag when n >= 5 and |x - m| > 3*sqrt(v); "
+    "no lookahead, warm-up guarded), then the RiskMetrics EW "
+    "mean/variance update with the OLD mean in the deviation. "
+    "availableNow replay is bit-identical to the DuckDB fold "
+    "(IEEE sqrt, literals written directly). At scale: state "
+    "O(#keys), work O(batch) — the alert evaluates inline with "
+    "ingestion, no windowed re-aggregation pass.",
+)
+def q_stream_tws_anomaly(spark: SparkSession, sf: str) -> DataFrame:
+    out = run_tws(streaming_ew_anomaly_tws(events_stream(spark, sf)))
+    # presentation rounding HERE — processor state stays raw
+    z = F.lit(0.0)
+    return out.select(
+        "user_id",
+        "n_events",
+        (F.round("ew_mean", 6) + z).alias("ew_mean"),
+        (F.round("ew_var", 6) + z).alias("ew_var"),
+        "n_anomalies",
+    )
 
-    q_stream_tws_timers = register(
-        "q_stream_tws_timers",
-        oracle=ORACLE_STREAM_TWS_TIMERS,
-        doc="EVENT-TIME TIMERS on transformWithStateInPandas (the "
-        "capability the Spark-4 API adds over applyInPandasWithState): "
-        "per-user visit close-out where emission is driven purely by "
-        "timer expiry against the watermark — each batch re-registers "
-        "one timer at last_event + 30 min; when the watermark (max "
-        "event time - 10 min) passes it, handleExpiredTimer emits the "
-        "closed visit and clears state. availableNow over the one-file "
-        "fixture makes the firing set deterministic; full SQL oracle. "
-        "At scale this is the production idle-session/TTL-eviction "
-        "pattern: state is O(active users) and timers replace the "
-        "full-keyspace scan a batch close-out would need.",
-    )(q_stream_tws_timers)
 
-    q_stream_tws_timer_list = register(
-        "q_stream_tws_timer_list",
-        # A user's cache closes iff their timer (last event ms +
-        # 30 min) falls behind the final watermark (global max event
-        # ms - 10 min); the kept/evicted split compares ms-floored
-        # event times against the exact integer cutoff expiry -
-        # 60 min. Value sums are exact integer cents (the house
-        # cast(round(value*100)) expression on both sides).
-        oracle="""
+@register(
+    "q_stream_tws_timers",
+    oracle=ORACLE_STREAM_TWS_TIMERS,
+    doc="EVENT-TIME TIMERS on transformWithStateInPandas (the "
+    "capability the Spark-4 API adds over applyInPandasWithState): "
+    "per-user visit close-out where emission is driven purely by "
+    "timer expiry against the watermark — each batch re-registers "
+    "one timer at last_event + 30 min; when the watermark (max "
+    "event time - 10 min) passes it, handleExpiredTimer emits the "
+    "closed visit and clears state. availableNow over the one-file "
+    "fixture makes the firing set deterministic; full SQL oracle. "
+    "At scale this is the production idle-session/TTL-eviction "
+    "pattern: state is O(active users) and timers replace the "
+    "full-keyspace scan a batch close-out would need.",
+)
+def q_stream_tws_timers(spark: SparkSession, sf: str) -> DataFrame:
+    return run_tws(streaming_activity_close_tws(events_stream(spark, sf)))
+
+
+@register(
+    "q_stream_tws_timer_list",
+    # A user's cache closes iff their timer (last event ms +
+    # 30 min) falls behind the final watermark (global max event
+    # ms - 10 min); the kept/evicted split compares ms-floored
+    # event times against the exact integer cutoff expiry -
+    # 60 min. Value sums are exact integer cents (the house
+    # cast(round(value*100)) expression on both sides).
+    oracle="""
         WITH e AS (
           SELECT user_id, epoch_ms(ts) AS ms,
                  CAST(round(value * 100) AS BIGINT) AS cents
@@ -981,63 +800,67 @@ else:
         FROM fired f JOIN e ON e.user_id = f.user_id
         GROUP BY 1
         """,
-        doc="TIMERS x LISTSTATE composition on "
-        "transformWithStateInPandas (SURVEY §2.8 — the session-cache "
-        "shape: the two state primitives the registry exercised "
-        "separately, now composed in ONE processor): per-user events "
-        "accumulate as typed ListState entries via per-entry "
-        "appendList, each batch re-registers an event-time timer at "
-        "last_event + 30 min, and timer expiry EVICTS entries older "
-        "than expiry - 60 min before emitting the cache summary "
-        "(kept/evicted counts + exact-cents kept sum) — eviction work "
-        "happens only on expiry, never as a per-batch keyspace scan; "
-        "state per key is bounded by the retention window. "
-        "availableNow over the one-file fixture evaluates every timer "
-        "against the single final watermark -> full SQL oracle.",
-    )(q_stream_tws_timer_list)
+    doc="TIMERS x LISTSTATE composition on "
+    "transformWithStateInPandas (SURVEY §2.8 — the session-cache "
+    "shape: the two state primitives the registry exercised "
+    "separately, now composed in ONE processor): per-user events "
+    "accumulate as typed ListState entries via per-entry "
+    "appendList, each batch re-registers an event-time timer at "
+    "last_event + 30 min, and timer expiry EVICTS entries older "
+    "than expiry - 60 min before emitting the cache summary "
+    "(kept/evicted counts + exact-cents kept sum) — eviction work "
+    "happens only on expiry, never as a per-batch keyspace scan; "
+    "state per key is bounded by the retention window. "
+    "availableNow over the one-file fixture evaluates every timer "
+    "against the single final watermark -> full SQL oracle.",
+)
+def q_stream_tws_timer_list(spark: SparkSession, sf: str) -> DataFrame:
+    return run_tws(streaming_session_cache_tws(events_stream(spark, sf)))
 
-    q_stream_tws_map_state = register(
-        "q_stream_tws_map_state",
-        oracle="""
+
+@register(
+    "q_stream_tws_map_state",
+    oracle="""
         SELECT user_id, event_type,
                CAST(COUNT(*) AS BIGINT) AS n_events
         FROM events GROUP BY user_id, event_type
         """,
-        doc="Typed MapState on transformWithStateInPandas (SURVEY §2.8) "
-        "— the third typed state kind, completing the trio (ValueState: "
-        "q_stream_tws_fix_merge; ListState: q_stream_tws_recent_k): "
-        "per-user map of event_type → running count, updated PER CELL "
-        "(only the types touched in a batch round-trip the store) — the "
-        "production shape for per-key feature counters where a "
-        "ValueState blob would rewrite the whole vector every batch. "
-        "availableNow over the one-file fixture emits each user's final "
-        "map once → full oracle as the plain per-user-per-type count.",
-    )(q_stream_tws_map_state)
+    doc="Typed MapState on transformWithStateInPandas (SURVEY §2.8) "
+    "— the third typed state kind, completing the trio (ValueState: "
+    "q_stream_tws_fix_merge; ListState: q_stream_tws_recent_k): "
+    "per-user map of event_type → running count, updated PER CELL "
+    "(only the types touched in a batch round-trip the store) — the "
+    "production shape for per-key feature counters where a "
+    "ValueState blob would rewrite the whole vector every batch. "
+    "availableNow over the one-file fixture emits each user's final "
+    "map once → full oracle as the plain per-user-per-type count.",
+)
+def q_stream_tws_map_state(spark: SparkSession, sf: str) -> DataFrame:
+    return run_tws(streaming_type_counts_tws(events_stream(spark, sf)))
 
-    q_stream_tws_recent_k = register(
-        "q_stream_tws_recent_k",
-        oracle=ORACLE_STREAM_TWS_RECENT_K,
-        doc="Typed ListState + state TTL on transformWithStateInPandas "
-        "(SURVEY §2.8): per-user last-5-events retention where the "
-        "processor trims the list inside every store round-trip — state "
-        "is O(k) per key forever — and the state variable carries the "
-        "store's own TTL (timeMode=ProcessingTime arms the clock), the "
-        "production idle-key eviction that needs no timers or scans. "
-        "Kept set is ordered by (ms-floored ts, event_id), a pure "
-        "function of the input regardless of batching → full oracle as "
-        "a per-user top-5 window. TTL eviction itself is pinned by a "
-        "sub-second-TTL two-run checkpoint test (tests/test_streaming).",
-    )(q_stream_tws_recent_k)
 
-    q_stream_tws_fix_merge = register(
-        "q_stream_tws_fix_merge",
-        oracle=ORACLE_STREAM_FIX_MERGE,
-        doc="The stateful fix-merge on Spark 4's transformWithStateInPandas "
-        "API (typed ValueState on the RocksDB state store — the successor "
-        "to applyInPandasWithState, adding timers/TTL/multiple state "
-        "variables for production eviction). Same merge core, same fixture, "
-        "same full oracle as q_stream_fix_merge (plans/nmea_oracle.py).",
-    )(q_stream_tws_fix_merge)
+@register(
+    "q_stream_tws_recent_k",
+    oracle=ORACLE_STREAM_TWS_RECENT_K,
+    doc="Typed ListState + state TTL on transformWithStateInPandas "
+    "(SURVEY §2.8): per-user last-5-events retention where the "
+    "processor trims the list inside every store round-trip — state "
+    "is O(k) per key forever — and the state variable carries the "
+    "store's own TTL (timeMode=ProcessingTime arms the clock), the "
+    "production idle-key eviction that needs no timers or scans. "
+    "Kept set is ordered by (ms-floored ts, event_id), a pure "
+    "function of the input regardless of batching → full oracle as "
+    "a per-user top-5 window. TTL eviction itself is pinned by a "
+    "sub-second-TTL two-run checkpoint test (tests/test_streaming).",
+)
+def q_stream_tws_recent_k(spark: SparkSession, sf: str) -> DataFrame:
+    # run_data_drained, NOT availableNow/processAllAvailable: in
+    # timeMode=ProcessingTime (required to arm state TTL) the engine
+    # schedules "no new data but cleaning up state" maintenance
+    # batches forever, so neither terminator's quiescence condition
+    # is ever met — the drained-commit poll in the runner is the
+    # terminating drive for this mode.
+    return run_tws(streaming_recent_k_tws(events_stream(spark, sf)), run_data_drained)
 
 
 @register(
@@ -1305,8 +1128,6 @@ def q_stream_upsert_sink(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import uuid
 
-    from gps_stream_processing_spark.streaming.runner import make_latest_upsert
-
     base = os.path.join(land_dir("upsert", sf), uuid.uuid4().hex)
     serving = os.path.join(base, "serving")
     ckpt = os.path.join(base, "ckpt")
@@ -1320,17 +1141,7 @@ def q_stream_upsert_sink(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        unload_idle_state_stores(spark)
+    run_foreach_batch(agg, upsert, ckpt)
     # snapshot + remove the per-call uuid dir (the q_stream_tws_forecast
     # hygiene — repeated bench/driver calls must not accumulate tables)
     res = spark.read.parquet(serving).localCheckpoint(eager=True)
@@ -1676,40 +1487,9 @@ def q_stream_progress(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_stream_tws_init_state(spark: SparkSession, sf: str) -> DataFrame:
-    from gps_stream_processing_spark.streaming.stateful import (
-        streaming_seeded_totals_tws,
-    )
-
-    with rocksdb_state_store(spark):
-        cutoff = "2024-01-15 00:00:00"
-        # Batch backfill aggregate = the initial state; the live stream
-        # carries only post-cutoff events.
-        seed = (
-            table(spark, sf, "events")
-            .filter(F.col("ts") < cutoff)
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        )
-        live = events_stream(spark, sf).filter(F.col("ts") >= cutoff)
-        snap = run_available_now(
-            streaming_seeded_totals_tws(live, seed),
-            output_mode="update",
-            state_partitions=tws_state_partitions(),
-        )
-        return snap.select(
-            "user_id", "n_events", F.round("sum_value", 6).alias("sum_value")
-        )
-
-
-if _tws_available():
-    # Gated like the other five TWS keys (the registration was
-    # unconditional before r14 — the key would have entered the
-    # registry in a protobuf-less environment and crashed at run
-    # time instead of being announced-absent).
-    q_stream_tws_init_state = register(
-        "q_stream_tws_init_state",
-        oracle="""
+@register(
+    "q_stream_tws_init_state",
+    oracle="""
         WITH agg AS (
           SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
                  SUM(value) AS sv
@@ -1721,20 +1501,35 @@ if _tws_available():
         SELECT a.user_id, a.n_events, ROUND(a.sv, 6) AS sum_value
         FROM agg a JOIN live USING (user_id)
         """,
-        doc="TWS INITIAL STATE (SURVEY §2.8): the batch→stream handoff — a "
-        "historical backfill aggregate (events before Jan 15) is handed to "
-        "transformWithStateInPandas as initialState (routed per-key to "
-        "handleInitialState before the first batch), and the live stream "
-        "(events from Jan 15 on) increments the seeded per-user totals. "
-        "The emitted totals therefore cover the FULL history without the "
-        "stream ever re-reading it — at 100 TB the seed is one batch "
-        "aggregation job, and the streaming job's state starts warm. "
-        "Oracle: full-table per-user totals restricted to users with at "
-        "least one live event (seed-only users never emit in update "
-        "mode). Completes the TWS surface: ValueState / ListState+TTL / "
-        "MapState / event-time timers / initial state "
-        "(streaming/stateful.py).",
-    )(q_stream_tws_init_state)
+    doc="TWS INITIAL STATE (SURVEY §2.8): the batch→stream handoff — a "
+    "historical backfill aggregate (events before Jan 15) is handed to "
+    "transformWithStateInPandas as initialState (routed per-key to "
+    "handleInitialState before the first batch), and the live stream "
+    "(events from Jan 15 on) increments the seeded per-user totals. "
+    "The emitted totals therefore cover the FULL history without the "
+    "stream ever re-reading it — at 100 TB the seed is one batch "
+    "aggregation job, and the streaming job's state starts warm. "
+    "Oracle: full-table per-user totals restricted to users with at "
+    "least one live event (seed-only users never emit in update "
+    "mode). Completes the TWS surface: ValueState / ListState+TTL / "
+    "MapState / event-time timers / initial state "
+    "(streaming/stateful.py).",
+)
+def q_stream_tws_init_state(spark: SparkSession, sf: str) -> DataFrame:
+    cutoff = "2024-01-15 00:00:00"
+    # Batch backfill aggregate = the initial state; the live stream
+    # carries only post-cutoff events.
+    seed = (
+        table(spark, sf, "events")
+        .filter(F.col("ts") < cutoff)
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+    )
+    live = events_stream(spark, sf).filter(F.col("ts") >= cutoff)
+    snap = run_tws(streaming_seeded_totals_tws(live, seed))
+    return snap.select(
+        "user_id", "n_events", F.round("sum_value", 6).alias("sum_value")
+    )
 
 
 @register(

@@ -21,8 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from gps_stream_processing_spark.schemas import TESTDATA_TABLES
 from gps_stream_processing_spark.session import require_conf
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Dimension tables small enough to broadcast at every scale factor the
 # TPC-H-ish schema supports (region/nation are bounded; the others grow
 # sublinearly vs the facts). Fact tables must never be broadcast.
@@ -52,36 +50,41 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown testdata table {name!r}; known: {TESTDATA_TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # events.ts has shipped as TIMESTAMP(NANOS) in some testdata
-        # generations (which Spark's parquet reader rejects,
-        # [PARQUET_TYPE_ILLEGAL]) and TIMESTAMP(MICROS, NTZ) in others.
-        # Handle both: nanos are read as long (the session's legacy
-        # conf, checked here since the scan reads it) and truncated
-        # to micros with integer division (`div`, not `/` — the ns epoch
-        # ≈ 1.7e18 exceeds double's 53-bit mantissa), matching DuckDB's
-        # ns→µs truncation bit-for-bit; NTZ micros are cast to the
-        # session-UTC TimestampType every downstream plan expects.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        require_conf(
-            spark, "spark.sql.legacy.parquet.nanosAsLong", "load_table('events')"
-        )
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        # NTZ→TimestampType reinterprets the wall-clock in the session TZ;
-        # epoch equality with the nanos path (and with DuckDB's naive-UTC
-        # oracle timestamps) holds only under UTC sessions. get_spark pins
-        # it, but load_table accepts any session — fail loudly instead of
-        # silently shifting timestamps.
-        require_conf(
-            spark,
-            "spark.sql.session.timeZone",
-            "load_table('events') NTZ->timestamp cast",
-        )
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return read_events(spark, path, "load_table('events')")
     return spark.read.parquet(path)
+
+
+def read_events(
+    spark: SparkSession, path: str, what: str, stream_dir: str | None = None
+) -> DataFrame:
+    """The events parquet at ``path`` with ``ts`` as the session-UTC
+    TimestampType every downstream plan expects: a batch read, or with
+    ``stream_dir`` a file stream over that directory read with the
+    batch read's schema (a streaming source must never infer).
+
+    events.ts has shipped as TIMESTAMP(NANOS) in some testdata
+    generations (which Spark's parquet reader rejects,
+    [PARQUET_TYPE_ILLEGAL]) and TIMESTAMP(MICROS, NTZ) in others.
+    Nanos are read as long (the session's legacy conf, checked here
+    since the scan reads it) and truncated to micros with integer
+    division (`div`, not `/` — the ns epoch ≈ 1.7e18 exceeds double's
+    53-bit mantissa), matching DuckDB's ns→µs truncation bit-for-bit.
+    NTZ→TimestampType reinterprets the wall-clock in the session TZ;
+    epoch equality with the nanos path (and with DuckDB's naive-UTC
+    oracle timestamps) holds only under UTC sessions. get_spark pins
+    it, but any session may call — fail loudly instead of silently
+    shifting timestamps and watermarks."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    require_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", what)
+    df = spark.read.parquet(path)
+    if stream_dir is not None:
+        df = spark.readStream.schema(df.schema).parquet(stream_dir)
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    require_conf(spark, "spark.sql.session.timeZone", f"{what} NTZ->timestamp cast")
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

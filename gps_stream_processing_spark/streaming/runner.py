@@ -16,14 +16,10 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from gps_stream_processing_spark.session import (
-    default_parallelism,
-    require_conf,
-    scoped_conf,
-)
+from gps_stream_processing_spark.session import default_parallelism, scoped_conf
+from gps_stream_processing_spark.sources.tables import read_events
 from gps_stream_processing_spark.workdir import land_dir
 
 # State-partition width for the transformWithStateInPandas keys. The
@@ -35,28 +31,13 @@ from gps_stream_processing_spark.workdir import land_dir
 # 32-core host runs the whole Python phase on 4 cores. Measured on
 # q_stream_tws_timer_list at sf0.1/local[32], warm 5-pass medians:
 # 4 parts 10.6s / 8 parts 6.8s / 16 parts 3.6-6.8s (diminishing, more
-# store instances); q_stream_tws_ewma 4.4s -> 3.4s. Default: 8 capped
-# at the host's core budget (below 8 cores the extra store instances
-# buy no parallelism, so the width follows the cores down to the
-# JVM-stateful floor of 4); production sizes this to keyspace x
-# throughput via the env knob (the count is pinned per checkpoint at
-# first start, so it is a deliberate per-stream decision either way).
+# store instances); q_stream_tws_ewma 4.4s -> 3.4s. So: 8 capped at the
+# host's core budget (below 8 cores the extra store instances buy no
+# parallelism, so the width follows the cores down to the JVM-stateful
+# floor of 4). Spark pins the count per checkpoint at first start.
 def tws_state_partitions() -> int:
-    """Resolved LAZILY at each use site (ADVICE r16): a module-level
-    constant would crash every import of this package on a malformed
-    env value and freeze the knob at first-import time."""
-    explicit = os.environ.get("SPARK_GRAFT_TWS_STATE_PARTITIONS")
-    if explicit:
-        try:
-            return int(explicit)
-        except ValueError:
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_TWS_STATE_PARTITIONS={explicit!r} is not an "
-                "int; falling back to the computed default",
-                stacklevel=2,
-            )
+    """Resolved at each use, so the core budget is read when the
+    stream starts, not when this module imports."""
     return min(8, max(4, default_parallelism()))
 
 
@@ -105,49 +86,12 @@ def rocksdb_state_store(spark: SparkSession):
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file stream (FIXTURES.md: events doubles as
-    the streaming fixture). Schema passed explicitly — a streaming
-    source must never infer."""
-    from pyspark.sql import functions as F
-
-    # ts has shipped as TIMESTAMP(NANOS) or TIMESTAMP(MICROS, NTZ)
-    # depending on the testdata generation (see sources/tables.load_table).
-    # A streaming source needs the schema up front, so probe the parquet
-    # footer once (cheap, driver-side) to pick the right read type.
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    the streaming fixture), read and normalized like the batch table
+    (:func:`sources.tables.read_events`). The streaming file source
+    requires a *directory*; the testdata is a single read-only file, so
+    the stream reads a symlink directory."""
     parquet_file = os.path.join(sf_dir, "events.parquet")
-    # Structural probe (not string-match): a tz-adjusted nanos column
-    # ("timestamp[ns, tz=UTC]") is still the nanos path — Spark's parquet
-    # reader rejects NANOS either way and needs the long read.
-    ts_type = pq.read_schema(parquet_file).field("ts").type
-    nanos = pa.types.is_timestamp(ts_type) and ts_type.unit == "ns"
-    ts_read_type = T.LongType() if nanos else T.TimestampNTZType()
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_read_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    require_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "events_stream")
-    # The streaming file source requires a *directory*; the testdata is a
-    # single file (read-only) → expose it through a symlink dir.
-    stream_dir = _stream_dir(parquet_file)
-    raw = spark.readStream.schema(schema).parquet(stream_dir)
-    if nanos:
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # NTZ→TimestampType reinterprets the wall-clock in the session TZ;
-    # epoch equality with the nanos path holds only under UTC sessions
-    # (get_spark pins it; a foreign session fails loudly instead of
-    # shifting watermarks).
-    require_conf(
-        spark, "spark.sql.session.timeZone", "events_stream NTZ->timestamp cast"
-    )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return read_events(spark, parquet_file, "events_stream", _stream_dir(parquet_file))
 
 
 def _stream_dir(parquet_file: str) -> str:
@@ -369,6 +313,43 @@ def run_process_all(
         {"processingTime": "0 seconds"},
         lambda q: q.processAllAvailable(),
     )
+
+
+def run_foreach_batch(
+    sdf: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    output_mode: str = "update",
+    state_partitions: int = 4,
+) -> None:
+    """Drive ``sdf`` with availableNow through the ``foreachBatch``
+    ``body`` on a durable ``checkpoint``, under the stream confs. The
+    idle state stores are unloaded afterwards, on failure too."""
+    spark = sdf.sparkSession
+    try:
+        with scoped_conf(spark, _stream_confs(state_partitions)):
+            q = (
+                sdf.writeStream.outputMode(output_mode)
+                .foreachBatch(body)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        unload_idle_state_stores(spark)
+
+
+def run_tws(
+    sdf: DataFrame, drive: Callable[..., DataFrame | None] = run_available_now
+) -> DataFrame | None:
+    """The one run path of the ``transformWithStateInPandas`` keys:
+    ``drive`` (a runner of this module) runs ``sdf`` in update mode at
+    :func:`tws_state_partitions` width inside :func:`rocksdb_state_store`.
+    The plan may be built before: the provider is read when the stream
+    starts."""
+    with rocksdb_state_store(sdf.sparkSession):
+        return drive(sdf, output_mode="update", state_partitions=tws_state_partitions())
 
 
 def make_latest_upsert(spark: SparkSession, serving: str, key_col: str):

@@ -11,27 +11,51 @@ def test_queries_and_oracles_list_every_key_once_sorted():
 
 
 def test_tws_key_presence_matches_capability():
-    """q_stream_tws_fix_merge is the one environment-dependent key
+    """The 11 ``q_stream_tws_*`` keys are the environment-dependent ones
     (transformWithStateInPandas needs google.protobuf for Spark's
-    state-server Python worker): its presence in the registry must
-    track that capability probe exactly, and its absence is announced
-    by an import-time warning plus the README note — never a silent
-    key-set drift."""
+    state-server Python worker): their presence in the registry must
+    track that capability probe exactly, and their absence is announced
+    by an import-time warning naming them plus the README note — never
+    a silent key-set drift."""
     from gps_stream_processing_spark import plans
-    from gps_stream_processing_spark.plans.streaming_queries import (
-        TWS_GATED_KEYS,
-        _tws_available,
-    )
+    from gps_stream_processing_spark.streaming.protobuf_compat import tws_available
 
-    avail = _tws_available()
+    avail = tws_available()
     qs = plans.queries()
-    for key in TWS_GATED_KEYS:
+    assert len(plans.TWS_KEYS) == 11
+    for key in plans.TWS_KEYS:
         assert (key in qs) == avail, key
-    # the constant is the single source of truth: no OTHER tws key may
-    # exist outside it (a new gated key must be listed)
-    assert {k for k in qs if k.startswith("q_stream_tws_")} <= set(
-        TWS_GATED_KEYS
+
+
+def test_tws_keys_drop_with_one_warning_when_the_probe_fails():
+    """Where the protobuf probe fails, the registry loses exactly the
+    ``q_stream_tws_*`` keys, and one import-time warning names each."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import warnings\n"
+        "from gps_stream_processing_spark.streaming import protobuf_compat\n"
+        "protobuf_compat.tws_available = lambda: False\n"
+        "with warnings.catch_warnings(record=True) as w:\n"
+        "    warnings.simplefilter('always')\n"
+        "    from gps_stream_processing_spark import plans\n"
+        "msgs = [str(x.message) for x in w if 'not registered' in str(x.message)]\n"
+        "assert len(msgs) == 1, msgs\n"
+        "assert all(k in msgs[0] for k in plans.TWS_KEYS), msgs\n"
+        "assert not any(k.startswith('q_stream_tws_') for k in plans.REGISTRY)\n"
+        "print(len(plans.TWS_KEYS), len(plans.REGISTRY))\n"
     )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    from gps_stream_processing_spark import plans
+
+    n_other = len(set(plans.REGISTRY) - set(plans.TWS_KEYS))
+    assert out.stdout.split() == [str(len(plans.TWS_KEYS)), str(n_other)]
 
 
 def test_every_registry_key_documented_in_survey():
@@ -66,12 +90,9 @@ def test_doc_counts_match_registry():
     )
     import check_counts
 
-    from gps_stream_processing_spark.plans import REGISTRY
-    from gps_stream_processing_spark.plans.streaming_queries import (
-        TWS_GATED_KEYS,
-        _tws_available,
-    )
+    from gps_stream_processing_spark.plans import REGISTRY, TWS_KEYS
+    from gps_stream_processing_spark.streaming.protobuf_compat import tws_available
 
-    gated = 0 if _tws_available() else len(TWS_GATED_KEYS)
+    gated = 0 if tws_available() else len(TWS_KEYS)
     errs = check_counts.check(len(REGISTRY), gated)
     assert not errs, "; ".join(errs)

@@ -80,19 +80,16 @@ def test_tws_fix_merge_equals_batch(spark, stream_fixture_dir, nmea_df):
         gps_fix_pipeline,
         parse_sentences,
     )
-    from gps_stream_processing_spark.streaming.runner import run_available_now
+    from gps_stream_processing_spark.streaming.runner import (
+        rocksdb_state_store,
+        run_available_now,
+    )
     from gps_stream_processing_spark.streaming.stateful import (
         nmea_json_stream,
         streaming_fix_merge_tws,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         parsed = parse_sentences(nmea_json_stream(spark, stream_fixture_dir))
         stream_out = run_available_now(
             streaming_fix_merge_tws(parsed), output_mode="update"
@@ -105,11 +102,6 @@ def test_tws_fix_merge_equals_batch(spark, stream_fixture_dir, nmea_df):
             ["track_id", "utc"], ignore_index=True
         )
         pd.testing.assert_frame_equal(s, b, check_dtype=False)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _fold_in_batches(track_id, frames):
@@ -267,6 +259,88 @@ def test_fix_merge_split_invariance_property(parsed_fixture_by_track):
             assert len(finals) == len(set(finals))
             got.update(_last_versions(emitted))
         assert got == one_batch
+
+    check()
+
+
+class _FakeValueState:
+    """The ValueState surface ``ValueFoldProcessor`` uses, kept in memory
+    the way the store keeps it between micro-batches."""
+
+    def __init__(self):
+        self.value = None
+
+    def exists(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+def test_value_fold_split_invariance_property():
+    """Property (hypothesis): for each value fold (EWMA, Holt, EW
+    anomaly), cutting one user's values into consecutive micro-batches
+    (rows shuffled inside a batch, which the fold re-sorts by
+    ``(us, event_id)``) and threading the stored ``(n, *acc)`` from
+    batch to batch gives a final state and a last emission bit-identical
+    to folding everything in one batch."""
+    import struct
+    from types import SimpleNamespace
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from gps_stream_processing_spark.streaming.stateful import (
+        EW_ANOMALY_OUTPUT_SCHEMA,
+        EW_ANOMALY_STATE_SCHEMA,
+        EWMA_OUTPUT_SCHEMA,
+        EWMA_STATE_SCHEMA,
+        HOLT_OUTPUT_SCHEMA,
+        HOLT_STATE_SCHEMA,
+        ValueFoldProcessor,
+        ew_anomaly_fold,
+        ewma_fold,
+        fold_values,
+        holt_fold,
+    )
+
+    families = {
+        "ewma": (EWMA_STATE_SCHEMA, EWMA_OUTPUT_SCHEMA, ewma_fold()),
+        "holt": (HOLT_STATE_SCHEMA, HOLT_OUTPUT_SCHEMA, holt_fold()),
+        "anomaly": (EW_ANOMALY_STATE_SCHEMA, EW_ANOMALY_OUTPUT_SCHEMA, ew_anomaly_fold()),
+    }
+
+    def bits(t):
+        return tuple(struct.pack(">d", v) if isinstance(v, float) else int(v) for v in t)
+
+    value = st.one_of(
+        st.floats(-1.0, 1.0, allow_nan=False), st.sampled_from([500.0, -500.0])
+    )
+
+    @settings(max_examples=60, deadline=None)
+    @given(values=st.lists(value, min_size=1, max_size=60), data=st.data())
+    def check(values, data):
+        n = len(values)
+        us = sorted(data.draw(st.lists(st.integers(0, 20), min_size=n, max_size=n)))
+        rows = pd.DataFrame({"us": us, "event_id": range(n), "value": values})
+        cuts = sorted(c for c in data.draw(st.sets(st.integers(1, n), max_size=12)) if c < n)
+        seed = data.draw(st.integers(0, 2**16))
+        bounds = list(zip([0, *cuts], [*cuts, n]))
+        for name, (state_schema, output_schema, fold) in families.items():
+            one = fold_values(None, iter([rows]), *fold)
+            assert one[0] == n
+            proc = ValueFoldProcessor(name, state_schema, output_schema, fold)
+            store = _FakeValueState()
+            proc.init(SimpleNamespace(getValueState=lambda *_: store))
+            for a, b in bounds:
+                frame = rows.iloc[a:b].sample(frac=1, random_state=seed)
+                (emitted,) = proc.handleInputRows((7,), iter([frame]), None)
+            assert bits(store.get()) == bits(one), name
+            (last,) = emitted.itertuples(index=False, name=None)
+            assert bits(last) == bits((7, *one)), name
 
     check()
 
@@ -653,6 +727,7 @@ def test_list_state_ttl_evicts_across_runs(spark, tmp_path):
 
     from pyspark.sql import types as T
 
+    from gps_stream_processing_spark.streaming.runner import rocksdb_state_store
     from gps_stream_processing_spark.streaming.stateful import (
         RECENT_K_OUTPUT_SCHEMA,
         make_recent_k_processor,
@@ -732,13 +807,7 @@ def test_list_state_ttl_evicts_across_runs(spark, tmp_path):
 
         return _pd.concat([o for o in outputs if len(o)], ignore_index=True)
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         for ttl_ms, expect_n, expect_sum in ((500, 2, 200.0), (None, 5, 203.0)):
             src = tmp_path / f"src_{ttl_ms}"
             src.mkdir()
@@ -752,11 +821,6 @@ def test_list_state_ttl_evicts_across_runs(spark, tmp_path):
             row = out2.loc[out2.user_id == 7].iloc[-1]
             assert row["n_recent"] == expect_n, (ttl_ms, row.to_dict())
             assert row["sum_recent_value"] == expect_sum
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_tws_init_state_seeds_history(spark):
@@ -1060,20 +1124,17 @@ def test_rocksdb_state_store_scope_sets_and_restores_confs(spark):
 
 
 def test_tws_state_partition_default_follows_core_budget(monkeypatch):
-    """r16 optimization pin: the TWS state-partition default is 8
+    """r16 optimization pin: the TWS state-partition width is 8
     capped at the host's core budget (floor 4 — the JVM-stateful
-    width), and the env knob overrides it outright."""
+    width)."""
     from gps_stream_processing_spark.streaming import runner as R
 
-    monkeypatch.delenv("SPARK_GRAFT_TWS_STATE_PARTITIONS", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     assert R.tws_state_partitions() == 8
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
     assert R.tws_state_partitions() == 4
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
     assert R.tws_state_partitions() == 6
-    monkeypatch.setenv("SPARK_GRAFT_TWS_STATE_PARTITIONS", "12")
-    assert R.tws_state_partitions() == 12
 
 
 @pytest.mark.parametrize(
@@ -1112,7 +1173,10 @@ def test_conf_restores_and_worker_wiring_have_one_home():
     ``registry.tune_session``), never left behind by a plan; the
     protobuf worker wiring runs only where a session is built or tuned,
     ahead of its first Python function wrap; and the worker daemon is
-    chosen only where the SparkContext is built."""
+    chosen only where the SparkContext is built. The RocksDB scope and
+    the TWS width are applied only by ``runner.run_tws``, and every
+    query registers through the ``@register`` decorator, never a
+    ``register(...)(fn)`` call."""
     import ast
     import pathlib
 
@@ -1120,6 +1184,7 @@ def test_conf_restores_and_worker_wiring_have_one_home():
 
     root = pathlib.Path(pkg.__file__).parent
     unsets, sets, wirings, daemons = set(), set(), set(), set()
+    tws_runs, call_registers = set(), set()
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         for top in ast.parse(path.read_text()).body:
@@ -1146,6 +1211,10 @@ def test_conf_restores_and_worker_wiring_have_one_home():
                 if name in ("ensure_protobuf", "configure_worker_env"):
                     if rel != "streaming/protobuf_compat.py":
                         wirings.add((rel, owner))
+                if name in ("rocksdb_state_store", "tws_state_partitions"):
+                    tws_runs.add((rel, owner))
+                if isinstance(f, ast.Call) and getattr(f.func, "id", "") == "register":
+                    call_registers.add((rel, owner))
     assert unsets == {"session.py"}, sorted(unsets)
     assert sets == {"session.py", "plans/registry.py"}, sorted(sets)
     assert wirings == {
@@ -1153,6 +1222,8 @@ def test_conf_restores_and_worker_wiring_have_one_home():
         ("plans/registry.py", "tune_session"),
     }, sorted(wirings)
     assert daemons == {("session.py", "get_spark")}, sorted(daemons)
+    assert tws_runs == {("streaming/runner.py", "run_tws")}, sorted(tws_runs)
+    assert not call_registers, sorted(call_registers)
 
 
 def test_worker_rereads_no_unchanged_archive(spark):
@@ -1905,6 +1976,7 @@ def test_tws_anomaly_flags_injected_spike(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from gps_stream_processing_spark.streaming.runner import (
+        rocksdb_state_store,
         run_available_now,
     )
     from gps_stream_processing_spark.streaming.stateful import (
@@ -1926,25 +1998,13 @@ def test_tws_anomaly_flags_injected_spike(spark, tmp_path):
         "user_id", F.to_timestamp("ts_s").alias("ts"), "event_id", "value"
     ).coalesce(1).write.parquet(d)
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         ev = spark.readStream.schema(
             "user_id bigint, ts timestamp, event_id bigint, value double"
         ).parquet(d)
         out = run_available_now(
             streaming_ew_anomaly_tws(ev), output_mode="update"
         ).toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     res = {int(r["user_id"]): int(r["n_anomalies"]) for r in out.to_dict("records")}
     # the spike itself flags; the post-spike mean/var shock may flag a
     # couple of re-settling rows, but the detector must fire and the

@@ -82,13 +82,10 @@ def check(n_registry: int, n_gated_absent: int = 0) -> list[str]:
 
 def main() -> int:
     sys.path.insert(0, str(REPO))
-    from gps_stream_processing_spark.plans import REGISTRY
-    from gps_stream_processing_spark.plans.streaming_queries import (
-        TWS_GATED_KEYS,
-        _tws_available,
-    )
+    from gps_stream_processing_spark.plans import REGISTRY, TWS_KEYS
+    from gps_stream_processing_spark.streaming.protobuf_compat import tws_available
 
-    gated_absent = 0 if _tws_available() else len(TWS_GATED_KEYS)
+    gated_absent = 0 if tws_available() else len(TWS_KEYS)
     errs = check(len(REGISTRY), gated_absent)
     for e in errs:
         print(f"COUNT DRIFT: {e}", file=sys.stderr)
